@@ -651,11 +651,14 @@ def nearest_match(
     nearest-within-window matching that validates the reference's
     series downstream (``asof_join`` is the backward-only special case).
 
-    Same union-tag plan: one shuffle on ``keys``, ONE sort, two window
-    frames over it — ``last`` over the backward frame picks the most
-    recent prior right row, ``first`` over the forward frame picks the
-    earliest later one (rights at the probe's exact timestamp sort
-    before it, so they win via the backward side at distance 0), then a
+    Same union-tag plan: one shuffle on ``keys``, two running window
+    frames — ``last`` over the backward frame picks the most recent
+    prior right row, ``last`` over the same frame in the REVERSED order
+    picks the earliest later one (rights at the probe's exact timestamp
+    sort before it, so they win via the backward side at distance 0).
+    The reversed running frame is the forward frame ``(0,
+    unboundedFollowing)`` at O(n) per key instead of that frame's
+    per-row recompute, which is O(n^2) on a hot key. Then a
     null-aware comparison of the two truncated-second distances keeps
     the closer (prior wins exact ties). ``window_s`` nulls matches
     farther than that many seconds — sufficient to check only the two
@@ -674,12 +677,12 @@ def nearest_match(
     unioned, left_cols = _nearest_union(
         left, right, keys, left_ts, right_ts, value_col, tiebreak
     )
-    order = [F.col("__ts").asc(), F.col("__is_right").desc(), F.col("__tb").asc()]
+    order, reverse = _nearest_orders()
     wb = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    wf = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
-        0, Window.unboundedFollowing
+    wf = Window.partitionBy(*keys).orderBy(*reverse).rowsBetween(
+        Window.unboundedPreceding, 0
     )
     cand = unioned.select(
         *left_cols,
@@ -687,10 +690,21 @@ def nearest_match(
         F.unix_timestamp("__ts").alias("__l_epoch"),
         F.last("__r_epoch", ignorenulls=True).over(wb).alias("__p_epoch"),
         F.last("__v", ignorenulls=True).over(wb).alias("__p_v"),
-        F.first("__r_epoch", ignorenulls=True).over(wf).alias("__n_epoch"),
-        F.first("__v", ignorenulls=True).over(wf).alias("__n_v"),
+        F.last("__r_epoch", ignorenulls=True).over(wf).alias("__n_epoch"),
+        F.last("__v", ignorenulls=True).over(wf).alias("__n_v"),
     ).filter(F.col("__is_right") == 0)
     return _nearest_finalize(cand, left_cols, value_col, window_s)
+
+
+def _nearest_orders() -> tuple[list[Column], list[Column]]:
+    """The nearest-match row order and its exact mirror (every direction
+    and null placement flipped): a running frame over the mirror is the
+    forward frame of the original order."""
+    order = [F.col("__ts").asc(), F.col("__is_right").desc(), F.col("__tb").asc()]
+    reverse = [
+        F.col("__ts").desc(), F.col("__is_right").asc(), F.col("__tb").desc()
+    ]
+    return order, reverse
 
 
 def _nearest_union(
@@ -802,12 +816,14 @@ def nearest_match_scalable(
         )
     chunk, _lo, _width = tc
     d = unioned.withColumn("__pid", chunk)
-    order = [F.col("__ts").asc(), F.col("__is_right").desc(), F.col("__tb").asc()]
+    # forward candidates from a running frame over the mirrored order,
+    # as in nearest_match
+    order, reverse = _nearest_orders()
     wb = Window.partitionBy("__pid", *keys).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    wf = Window.partitionBy("__pid", *keys).orderBy(*order).rowsBetween(
-        0, Window.unboundedFollowing
+    wf = Window.partitionBy("__pid", *keys).orderBy(*reverse).rowsBetween(
+        Window.unboundedPreceding, 0
     )
     local = d.select(
         *left_cols,
@@ -816,8 +832,8 @@ def nearest_match_scalable(
         F.unix_timestamp("__ts").alias("__l_epoch"),
         F.last("__r_epoch", ignorenulls=True).over(wb).alias("__lp_epoch"),
         F.last("__v", ignorenulls=True).over(wb).alias("__lp_v"),
-        F.first("__r_epoch", ignorenulls=True).over(wf).alias("__ln_epoch"),
-        F.first("__v", ignorenulls=True).over(wf).alias("__ln_v"),
+        F.last("__r_epoch", ignorenulls=True).over(wf).alias("__ln_epoch"),
+        F.last("__v", ignorenulls=True).over(wf).alias("__ln_v"),
     ).filter(F.col("__is_right") == 0)
 
     is_r = F.col("__is_right") == 1

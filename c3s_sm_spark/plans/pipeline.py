@@ -15,12 +15,13 @@ Design (Spark-first, scale-first):
   idempotent, and hence crash-resumable by simply re-running — while
   keeping file counts ~30x lower than day-grain partitions;
 - each tier refresh is **incremental**: it diffs its *source* table's
-  snapshots against the high-water-mark snapshot recorded in the lineage
-  table, derives the affected window set from only the delta files
-  (file-level manifest diff — no scan), recomputes exactly those windows
-  from the source tier, and overwrites them. The lineage row advances the
-  HWM in the same logical step; if the process dies between tiers, the
-  next run redoes only the unfinished tiers (reference analog: the
+  snapshots against the high-water mark (HWM) — the source snapshot the
+  tier's own newest commit records as ``src_snapshot`` — and reads the
+  affected months off the ``pmonth`` path segments of the delta files
+  (file-level manifest diff — no scan), recomputes exactly those months
+  from the source tier, and overwrites them. The HWM advances atomically
+  with that overwrite; if the process dies between tiers, the next run
+  redoes only the unfinished tiers (reference analog: the
   ``000_overview.yml`` period record consumed by extend,
   ``/root/reference/src/c3s_sm/reshuffle.py:94-133``);
 - dekadal aggregates the *daily* tier and monthly the *dekadal* tier
@@ -31,16 +32,24 @@ Design (Spark-first, scale-first):
   residual skew at runtime;
 - lineage + per-partition metrics are tables themselves (reference S9/A4:
   yml summaries + coverage scan, ``/root/reference/src/c3s_sm/misc.py``).
+  Nothing on the refresh path reads them: the per-month metrics are
+  observed on the tier write itself, and the tier commit's summary
+  carries the run's lineage fields and metrics, so a crash between that
+  commit and the two bookkeeping appends is repaired by the next
+  ``refresh`` or ``maintain`` from metadata alone. The retention horizon
+  is a table property (``retention_through``), which survives snapshot
+  expiry.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import time
 import uuid
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from c3s_sm_spark.functions.codecs import pack_series, unpack_series
@@ -60,10 +69,6 @@ _LINEAGE_COLS = (
     "n_months int, n_rows bigint, wall_s double, finished_at double, "
     "status string, note string"
 )
-#: tail-table shape (only ever used to build EMPTY frames — truncate and
-#: overwrite-to-empty commits, which write no data files, so the string
-#: doc_id here never conflicts with a long-keyed pipeline's tail files)
-_TAIL_SCHEMA = "doc_id string, ts timestamp, v_mean double, pmonth string, kb int"
 #: point reads decode blobs ON THE DRIVER below this blob count (one
 #: blob = up to codecs.CHUNK points, so 512 blobs ~ 4.2M points — far
 #: past any real single-key tier series); beyond it, or when the caller
@@ -73,6 +78,42 @@ _METRICS_COLS = (
     "run_id string, tier string, pmonth string, n_rows bigint, n_points bigint, "
     "ts_min timestamp, ts_max timestamp, written_at double"
 )
+_EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+
+
+def _pmonths(files: list[str]) -> set[str]:
+    """``pmonth`` partition values named by data file paths (no scan)."""
+    return {SnapshotTable._partition_of(f, ["pmonth"])[0] for f in files} - {
+        None
+    }
+
+
+def _month_aggs(months: list[str]) -> list[Column]:
+    """Per-month row count, ``sum(nobs)`` and ts range (epoch micros) of
+    a tier frame, as global aggregates ``DataFrame.observe`` accepts."""
+    aggs = []
+    for i, m in enumerate(months):
+        in_m = F.col("pmonth") == m
+        aggs += [
+            F.count(F.when(in_m, 1)).alias(f"n_rows_{i}"),
+            F.sum(F.when(in_m, F.col("nobs"))).alias(f"n_points_{i}"),
+            F.min(F.when(in_m, F.unix_micros("ts"))).alias(f"ts_min_{i}"),
+            F.max(F.when(in_m, F.unix_micros("ts"))).alias(f"ts_max_{i}"),
+        ]
+    return aggs
+
+
+def _micros_ts(us: int | None) -> dt.datetime | None:
+    return None if us is None else _EPOCH + dt.timedelta(microseconds=us)
+
+
+def _naive_utc(bound):
+    """A point-read bound as a naive UTC pandas timestamp — the value
+    Spark's cast of the same literal gives in the (UTC) session."""
+    import pandas as pd
+
+    t = pd.Timestamp(bound)
+    return t.tz_convert("UTC").tz_localize(None) if t.tzinfo else t
 
 
 class TierPipeline:
@@ -197,58 +238,95 @@ class TierPipeline:
     # ----------------------------------------------------------------- state
 
     def _hwm(self, tier: str) -> str | None:
-        """Source-table snapshot already folded into ``tier`` (lineage)."""
-        try:
-            lin = self.lineage.read(self.spark)
-        except FileNotFoundError:
-            return None
-        row = (
-            lin.where((F.col("tier") == tier) & (F.col("status") == "ok"))
-            .orderBy(F.col("finished_at").desc())
-            .select("src_snapshot")
-            .head()
-        )
-        return row["src_snapshot"] if row else None
+        """Source-table snapshot already folded into ``tier``: the
+        ``src_snapshot`` on the tier's HEAD manifest. Refresh commits set
+        it; every other commit inherits it (see tableio), so compaction,
+        retention drops and snapshot expiry keep it."""
+        tbl = self.tiers[tier]
+        head = tbl.head()
+        return tbl._manifest(head)["summary"].get("src_snapshot") if head else None
 
     def _retention_through(self, table_name: str) -> str | None:
-        """Newest month dropped from ``table_name`` by retention (lineage
-        ``status='retention'`` rows carry it in ``note``), or None."""
-        try:
-            lin = self.lineage.read(self.spark)
-        except FileNotFoundError:
-            return None
-        if "note" not in lin.columns:
-            return None
-        row = (
-            lin.where(
-                (F.col("tier") == table_name)
-                & (F.col("status") == "retention")
-                & F.col("note").isNotNull()
-            )
-            .agg(F.max("note").alias("m"))
-            .head()
-        )
-        return row["m"] if row else None
+        """Newest month dropped from ``table_name`` by retention (the
+        table's ``retention_through`` property), or None."""
+        tables = {"raw": self.raw, **self.tiers}
+        return tables[table_name].properties().get("retention_through")
 
     def _source_table(self, tier: str) -> SnapshotTable:
         src = TIERS[tier]
         return self.raw if src is None else self.tiers[src]
 
+    # ----------------------------------------------------------- bookkeeping
+
+    def _last_refreshes(self) -> dict[str, dict]:
+        """Each tier's newest refresh commit (the manifest whose summary
+        carries lineage fields), found by a manifest walk from HEAD."""
+        out = {}
+        for tier, tbl in self.tiers.items():
+            sid = tbl.head()
+            while sid:
+                m = tbl._manifest(sid)
+                if "lineage" in m["summary"]:
+                    out[tier] = m
+                    break
+                sid = m["parent"]
+        return out
+
+    @staticmethod
+    def _recorded(tbl: SnapshotTable, wanted: set[tuple]) -> set[tuple]:
+        """Which ``(run_id, tier)`` pairs of ``wanted`` the bookkeeping
+        table ``tbl`` already holds: appends tag their summary with the
+        pair, and a compaction lists the pairs it absorbed."""
+        found: set[tuple] = set()
+        sid = tbl.head()
+        while sid and not wanted <= found:
+            m = tbl._manifest(sid)
+            summ = m["summary"]
+            found.add((summ.get("run_id"), summ.get("tier")))
+            found |= {tuple(p) for p in summ.get("recorded", [])}
+            sid = m["parent"]
+        return found & wanted
+
+    def _record(self, tier: str, man: dict, tables=("lineage", "metrics")) -> None:
+        """Append the lineage row and per-month metrics rows of the
+        refresh commit ``man`` (built on the driver from its summary)."""
+        summ = man["summary"]
+        run_id, lin = summ["run_id"], summ["lineage"]
+        tag = {"run_id": run_id, "tier": tier}
+        if "lineage" in tables:
+            row = (
+                run_id, tier, summ["src_snapshot"], man["snapshot_id"],
+                lin["n_months"], lin["n_rows"], lin["wall_s"],
+                lin["finished_at"], "ok", None,
+            )
+            self.lineage.append(
+                self.spark.createDataFrame([row], _LINEAGE_COLS), tag
+            )
+        if "metrics" in tables and summ["metrics"]:
+            rows = [
+                (run_id, tier, m, n, pts, _micros_ts(lo), _micros_ts(hi),
+                 lin["finished_at"])
+                for m, n, pts, lo, hi in summ["metrics"]
+            ]
+            self.metrics.append(
+                self.spark.createDataFrame(rows, _METRICS_COLS), tag
+            )
+
+    def _recover_bookkeeping(self) -> None:
+        """Re-append bookkeeping rows a crash lost. A tier commit
+        advances the HWM before its lineage and metrics appends run, so a
+        crash in between would otherwise drop that run's rows for good —
+        the re-run sees the tier current and skips it. Metadata only
+        (the same check as the streaming ``stream_batch_id`` replay)."""
+        last = self._last_refreshes()
+        wanted = {(m["summary"]["run_id"], t) for t, m in last.items()}
+        for name in ("lineage", "metrics"):
+            have = self._recorded(getattr(self, name), wanted)
+            for tier, man in last.items():
+                if (man["summary"]["run_id"], tier) not in have:
+                    self._record(tier, man, (name,))
+
     # --------------------------------------------------------------- refresh
-
-    def _affected_months(self, tier: str, delta: DataFrame) -> list[str]:
-        """Partition months touched by the source delta.
-
-        No window arithmetic needed beyond month truncation: every tier's
-        windows nest inside calendar months, so "months containing new
-        source rows" is exactly the set of partitions to recompute.
-        """
-        rows = (
-            delta.select(F.date_format("ts", "yyyy-MM").alias("m"))
-            .distinct()
-            .collect()
-        )
-        return sorted(r["m"] for r in rows)
 
     def _compute_tier(self, tier: str, months: list[str]) -> DataFrame:
         """Recompute every ``tier`` window inside the given months from
@@ -296,11 +374,14 @@ class TierPipeline:
         """Incrementally fold new source snapshots into each tier.
 
         Returns per-tier stats. Safe to re-run at any point: each tier is
-        an idempotent partition overwrite + lineage append; a crashed run
-        leaves the HWM untouched so the next run redoes the same windows.
+        an idempotent partition overwrite whose commit also advances the
+        HWM; a run that dies before that commit leaves the HWM untouched
+        so the next run redoes the same months, and one that dies after
+        it gets its bookkeeping rows re-appended by the next run.
         """
         run_id = uuid.uuid4().hex[:12]
         report: dict[str, dict] = {}
+        self._recover_bookkeeping()
         for tier in tiers or list(TIERS):
             t0 = time.perf_counter()
             src_tbl = self._source_table(tier)
@@ -309,11 +390,11 @@ class TierPipeline:
             if src_head is None or src_head == hwm:
                 report[tier] = {"months": 0, "rows": 0, "skipped": True}
                 continue
-            delta = src_tbl.read_incremental(self.spark, hwm, src_head)
-            if delta is None:
-                report[tier] = {"months": 0, "rows": 0, "skipped": True}
-                continue
-            months = self._affected_months(tier, delta)
+            # every tier (and raw) is partitioned by pmonth = the month of
+            # ts, and every tier window nests inside its month, so the
+            # months named by the delta files are exactly the partitions
+            # to recompute
+            months = sorted(_pmonths(src_tbl.incremental_files(hwm, src_head)))
             src_name = "raw" if TIERS[tier] is None else TIERS[tier]
             horizon = self._retention_through(src_name)
             if horizon is not None:
@@ -331,65 +412,47 @@ class TierPipeline:
                 report[tier] = {**report.get(tier, {}), "months": 0,
                                 "rows": 0, "skipped": True}
                 continue
-            out = self._compute_tier(tier, months)
+            # per-partition metrics (A4 coverage analog) observed on the
+            # write itself: each recomputed month is written whole
+            obs = Observation(f"refresh-{tier}")
+            out = self._compute_tier(tier, months).observe(
+                obs, *_month_aggs(months)
+            )
+
+            def summary():  # called before the commit, inside this loop pass
+                got = obs.get
+                metrics = [
+                    [m, got[f"n_rows_{i}"], got[f"n_points_{i}"],
+                     got[f"ts_min_{i}"], got[f"ts_max_{i}"]]
+                    for i, m in enumerate(months)
+                    if got[f"n_rows_{i}"]
+                ]
+                lineage = {
+                    "n_months": len(months),
+                    "n_rows": sum(r[1] for r in metrics),
+                    "wall_s": time.perf_counter() - t0,
+                    "finished_at": time.time(),
+                }
+                return {"run_id": run_id, "months": len(months),
+                        "src_snapshot": src_head, "lineage": lineage,
+                        "metrics": metrics}
+
             # replace_grain=1: the recompute unit is the month — every
             # (pmonth, kb) file under a recomputed month is superseded,
             # including buckets the new month data happens not to touch
             dst_snap = self.tiers[tier].overwrite_partitions(
-                out,
-                {"run_id": run_id, "months": len(months)},
-                replace_grain=1,
+                out, summary, replace_grain=1
             )
-            # per-partition metrics (A4 coverage analog) from what we wrote
-            written = self.tiers[tier].read(self.spark).where(
-                F.col("pmonth").isin(months)
-            )
-            mrows = written.groupBy("pmonth").agg(
-                F.count("*").alias("n_rows"),
-                F.sum("nobs").alias("n_points"),
-                F.min("ts").alias("ts_min"),
-                F.max("ts").alias("ts_max"),
-            )
-            n_rows = mrows.agg(F.sum("n_rows")).head()[0] or 0
-            wall = time.perf_counter() - t0
-            self.metrics.append(
-                mrows.select(
-                    F.lit(run_id).alias("run_id"),
-                    F.lit(tier).alias("tier"),
-                    "pmonth",
-                    "n_rows",
-                    "n_points",
-                    "ts_min",
-                    "ts_max",
-                    F.lit(time.time()).alias("written_at"),
-                )
-            )
-            self.lineage.append(
-                self.spark.createDataFrame(
-                    [
-                        (
-                            run_id,
-                            tier,
-                            src_head,
-                            dst_snap,
-                            len(months),
-                            int(n_rows),
-                            wall,
-                            time.time(),
-                            "ok",
-                            None,
-                        )
-                    ],
-                    _LINEAGE_COLS,
-                )
-            )
+            man = self.tiers[tier]._manifest(dst_snap)
+            self._record(tier, man)
+            lin = man["summary"]["lineage"]
             # merge, don't replace: an earlier skipped_aged_months note
             # for this tier must survive alongside the refresh stats
             report[tier] = {
                 **report.get(tier, {}),
                 "months": len(months),
-                "rows": int(n_rows),
-                "wall_s": round(wall, 3),
+                "rows": lin["n_rows"],
+                "wall_s": round(lin["wall_s"], 3),
             }
         return report
 
@@ -411,16 +474,9 @@ class TierPipeline:
         tail = self.tails[tier]
         if tail.head() is None or not tail._files():
             return
-        empty = self.spark.createDataFrame([], _TAIL_SCHEMA)
-        # replace_values=[()] — the zero-length prefix matches EVERY
-        # partition, so the commit drops all tail files; an empty df
-        # alone would replace nothing (the dynamic replace set is
-        # derived from written files, and there are none)
-        tail.overwrite_partitions(
-            empty,
-            {"op": "fold_truncate", **(summary or {})},
-            replace_values=[()],
-        )
+        # the zero-length prefix matches EVERY partition: a metadata-only
+        # commit that drops all tail files
+        tail.delete_partitions([()], {"op": "fold_truncate", **(summary or {})})
 
     def pack_tier(
         self, tier: str, incremental: bool = True, fold: bool | None = None
@@ -480,15 +536,7 @@ class TierPipeline:
         if prev_src is not None and prev_src in chain_ids and not fold:
             if prev_src == head:
                 return ptbl.head()  # already current
-            delta = tbl.read_incremental(self.spark, prev_src, head)
-            months: set[str] = set()
-            if delta is not None:
-                months |= {
-                    r["m"]
-                    for r in delta.select(
-                        F.col("pmonth").alias("m")
-                    ).distinct().collect()
-                }
+            months = _pmonths(tbl.incremental_files(prev_src, head))
             # months named only by removed files (keys superseded by an
             # overwrite, no replacement row): read the pmonth path
             # segment of each file an overwrite dropped vs its parent
@@ -501,18 +549,12 @@ class TierPipeline:
                     pm = tbl._partition_of(f, ["pmonth"])[0]
                     if pm is not None:
                         months.add(pm)
-            key_type = (
-                tbl.read(self.spark).schema[self.key].dataType.simpleString()
-            )
             if not months:
                 # rewrite-only window (compact): data unchanged — record
                 # the new source snapshot without touching any file; the
                 # mask (and the tail rows it points at) carries forward
-                empty = self.spark.createDataFrame(
-                    [], self.packed_schema(key_type)
-                )
                 return ptbl.overwrite_partitions(
-                    empty,
+                    None,
                     {
                         "tier": tier,
                         "src_snapshot": head,
@@ -528,16 +570,18 @@ class TierPipeline:
                     self.tails[tier]
                 ) > self.tail_fold_frac * max(self._table_bytes(ptbl), 1)
             if not fold:
+                tail_df = None
+                delta = tbl.read_incremental(self.spark, prev_src, head)
                 if delta is not None:
+                    # the delta's key type comes from the recorded
+                    # schemas: planning this scan runs no Spark job
                     tail_df = delta.select(
-                        F.col(self.key).cast(key_type).alias("doc_id"),
+                        F.col(self.key).alias("doc_id"),
                         "ts",
                         "v_mean",
                         "pmonth",
                         F.col("kb").cast("int"),
                     ).repartition(F.col("pmonth"))
-                else:
-                    tail_df = self.spark.createDataFrame([], _TAIL_SCHEMA)
                 # month-grain overwrite, replace_values covering months
                 # with NO delta rows (overwrite-to-empty): their old tail
                 # rows are superseded even though nothing replaces them
@@ -546,11 +590,8 @@ class TierPipeline:
                     {"op": "tail_append", "src_snapshot": head},
                     replace_values=[(m,) for m in sorted(months)],
                 )
-                empty = self.spark.createDataFrame(
-                    [], self.packed_schema(key_type)
-                )
                 return ptbl.overwrite_partitions(
-                    empty,
+                    None,
                     {
                         "tier": tier,
                         "src_snapshot": head,
@@ -584,12 +625,6 @@ class TierPipeline:
         self._truncate_tail(tier, {"folded_into": snap})
         return snap
 
-    @staticmethod
-    def packed_schema(key_type: str = "string") -> str:
-        from c3s_sm_spark.functions.codecs import packed_schema_for
-
-        return packed_schema_for(key_type) + ", bucket int"
-
     # ----------------------------------------------------------------- reads
 
     def read_tier(self, tier: str) -> DataFrame:
@@ -597,12 +632,19 @@ class TierPipeline:
         return self.tiers[tier].read(self.spark).drop("kb")
 
     def _read_packed_local(
-        self, packed: DataFrame, tier: str, key_value, masked: list[str]
+        self,
+        packed: DataFrame,
+        tier: str,
+        key_value,
+        masked: list[str],
+        start: str | None = None,
+        end: str | None = None,
     ):
         """Collect pruned packed blobs AND the key's masked-month tail
         rows in ONE Spark job (tagged union with per-branch limits),
-        decode + mask + merge on the DRIVER with the same numpy codecs;
-        returns a pandas frame, or None past either cap (the
+        decode + mask + merge + ``[start, end]`` trim + ``ts`` sort on the
+        DRIVER with the same numpy codecs; returns a ts-ordered pandas
+        frame, or None past either cap (the
         ``limit(cap+1)`` probes bound the collect itself, so a
         pathological key cannot flood the driver — the caller then
         degrades to the distributed decode). A point read's blob set is
@@ -681,7 +723,11 @@ class TierPipeline:
                     }
                 )
                 pdf = pd.concat([pdf, tail_pdf], ignore_index=True)
-        return pdf
+        if start is not None:
+            pdf = pdf[pdf["ts"] >= _naive_utc(start)]
+        if end is not None:
+            pdf = pdf[pdf["ts"] <= _naive_utc(end)]
+        return pdf.sort_values("ts", kind="stable", ignore_index=True)
 
     def _tail_rows(
         self, tier: str, key_value, masked: list[str]
@@ -762,32 +808,31 @@ class TierPipeline:
                 packed = packed.where(F.col("ts_min") <= F.lit(end))
             key_type = packed.schema["doc_id"].dataType.simpleString()
             out_schema = f"doc_id {key_type}, ts timestamp, v_mean double"
-            out = None
             if local_decode is not False:
                 # driver-side assembly: one Spark job collects blobs +
-                # tail rows, then decode + mask + merge happen in
-                # pandas, ONE createDataFrame — the distributed variant
-                # pays a Spark job for the union and another for the
-                # masked filter on every read
-                pdf = self._read_packed_local(packed, tier, key_value, masked)
+                # tail rows, then decode + mask + merge + range trim +
+                # sort happen in pandas, ONE createDataFrame of rows
+                # already in order — the distributed variant pays a
+                # Spark job for the union and another for the masked
+                # filter, and a Spark orderBy three more (range sample,
+                # shuffle, result), on every read
+                pdf = self._read_packed_local(
+                    packed, tier, key_value, masked, start, end
+                )
                 if pdf is not None:
                     if len(pdf):
-                        out = self.spark.createDataFrame(
+                        return self.spark.createDataFrame(
                             pdf, schema=out_schema
                         )
-                    else:
-                        out = self.spark.createDataFrame([], out_schema)
-            if out is None:
-                # distributed decode (caller-forced, or past the local
-                # caps): same semantics, Spark-side mask + tail union
-                out = unpack_series(packed)
-                if masked:
-                    out = out.where(
-                        ~F.date_format("ts", "yyyy-MM").isin(masked)
-                    )
-                    tail_out = self._tail_rows(tier, key_value, masked)
-                    if tail_out is not None:
-                        out = out.unionByName(tail_out)
+                    return self.spark.createDataFrame([], out_schema)
+            # distributed decode (caller-forced, or past the local caps):
+            # same semantics, Spark-side mask + tail union
+            out = unpack_series(packed)
+            if masked:
+                out = out.where(~F.date_format("ts", "yyyy-MM").isin(masked))
+                tail_out = self._tail_rows(tier, key_value, masked)
+                if tail_out is not None:
+                    out = out.unionByName(tail_out)
         except FileNotFoundError:
             # kb partition predicate: the fallback point read file-prunes
             # to the key's bucket (1/n_buckets of the tier) before the
@@ -843,17 +888,17 @@ class TierPipeline:
         reason). The drop itself is a metadata-only
         :meth:`~c3s_sm_spark.sources.tableio.SnapshotTable.delete_partitions`
         commit — no data rewrite, no scan, time travel intact until
-        ``expire_snapshots`` — and each drop appends a ``status=
-        'retention'`` lineage row (the HWM query filters ``status='ok'``,
-        so retention never perturbs incremental refresh).
+        ``expire_snapshots`` — which inherits the tier's HWM, so retention
+        never perturbs incremental refresh. Each drop raises the table's
+        ``retention_through`` property to the newest dropped month (never
+        lowers it: refresh reads it as the horizon below which late rows
+        are ignored) and appends a ``status='retention'`` lineage row.
         """
         run_id = uuid.uuid4().hex[:12]
         tables = {"raw": self.raw, **self.tiers}
 
         def _months(tbl: SnapshotTable) -> set[str]:
-            return {
-                tbl._partition_of(f, ["pmonth"])[0] for f in tbl._files()
-            }
+            return _pmonths(tbl._files())
 
         if as_of is None:
             raw_months = _months(self.raw)
@@ -880,6 +925,8 @@ class TierPipeline:
             snap = tbl.delete_partitions(
                 [(m,) for m in old], {"op": "retention", "run_id": run_id}
             )
+            through = tbl.properties().get("retention_through")
+            tbl.set_properties({"retention_through": max(old[-1], through or "")})
             if tier in self.tiers:
                 # tombstone metrics rows: without them coverage()'s
                 # latest-row-per-(tier, pmonth) would keep reporting the
@@ -933,9 +980,10 @@ class TierPipeline:
         unboundedly.
 
         Expiry PROTECTS every downstream high-water mark: the consuming
-        tier's lineage HWM and the packed table's recorded source
-        snapshot. Expiring below a HWM doesn't corrupt anything, but it
-        silently degrades the consumer's next run from incremental to a
+        tier's HWM (the ``src_snapshot`` on its HEAD manifest — the HWM
+        lives on the tier commit, not in lineage) and the packed table's
+        recorded source snapshot. Expiring below a HWM doesn't corrupt
+        anything, but it silently degrades the consumer's next run from incremental to a
         full rebuild — and a raw full-rebuild can resurrect months that
         retention already dropped from the tier (raw may still hold
         them). read_incremental's contract says callers must not expire
@@ -945,8 +993,17 @@ class TierPipeline:
         packed tiers are maintained too — lineage/metrics append one
         single-file snapshot per refresh, and their manifest-driven read
         unions one scan branch per append, so an unmaintained pipeline's
-        _hwm() plan would grow O(#runs) for its lifetime.
+        ``status`` and ``coverage`` plans would grow O(#runs); nothing on
+        the refresh path reads them. Bookkeeping a crash lost is
+        re-appended FIRST (compaction and expiry could otherwise drop the
+        refresh commit that carries it), and each bookkeeping compaction
+        lists the ``(run_id, tier)`` pairs it absorbed, so the recovery
+        check still finds them.
         """
+        self._recover_bookkeeping()
+        recorded = [
+            [m["summary"]["run_id"], t] for t, m in self._last_refreshes().items()
+        ]
         report: dict[str, dict] = {}
         for name, tbl in {"raw": self.raw, **self.tiers}.items():
             protect = []
@@ -975,7 +1032,12 @@ class TierPipeline:
         for name, tbl in bookkeeping.items():
             if tbl.head() is None:
                 continue
-            compacted = tbl.compact(self.spark, target_rows_per_file)
+            compacted = tbl.compact(
+                self.spark,
+                target_rows_per_file,
+                summary={"recorded": recorded}
+                if name in ("lineage", "metrics") else None,
+            )
             expired = tbl.expire_snapshots(keep_last=keep_snapshots)
             report[name] = {"compacted": bool(compacted), **expired}
         return report

@@ -19,19 +19,36 @@ behind a thin interface that an Iceberg catalog can replace verbatim:
   added in ``(since, until]`` — the Iceberg ``start-snapshot-id`` pattern
   the incremental tier refresh uses (reference extend_ts,
   ``/root/reference/src/c3s_sm/reshuffle.py:67-133``).
+  ``incremental_files(since, until)`` is the same diff as a file list,
+  whose partition path segments name the touched partitions unread.
+- **recorded schema per write**: every write records the written frame's
+  schema (partition columns last, every field nullable — exactly what
+  parquet inference would return) in a ``_schema.json`` sidecar inside
+  its immutable subtree, and reads hand it to ``spark.read.schema``, so
+  planning a scan launches no footer-inference job. Subtrees written
+  without a record fall back to inference.
+- **metadata-only commits**: ``overwrite_partitions(None, ...)`` and
+  ``delete_partitions`` commit a manifest without running any Spark
+  write; the summary is the payload (a consumer's recorded source
+  snapshot, masked months). ``src_snapshot`` — the source snapshot a
+  derived table has folded in — is table state, not an event: a commit
+  whose summary does not set it inherits the parent's, so compaction,
+  partition drops and snapshot expiry never lose it.
 
 Layout::
 
     <root>/data/s<snapshot>/<partition dirs>/*.parquet   (immutable)
+    <root>/data/s<snapshot>/_schema.json                 (written schema)
     <root>/_manifests/snap-<id>.json                     (immutable)
     <root>/_manifests/HEAD                               (atomic pointer)
+    <root>/_manifests/table.json                         (table properties)
 
 Scale notes: manifests list files, not rows, so commit cost is O(files);
 partition values are encoded in directory names (hive-style via
 ``partitionBy``) so partition pruning works through Spark's file index, and
 ``basePath`` keeps partition columns when reading an explicit file subset.
 On a real deployment swap this class for Iceberg — the pipeline only calls
-the five methods above.
+the methods above.
 """
 
 from __future__ import annotations
@@ -40,8 +57,10 @@ import json
 import os
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 #: sentinel: "caller did not capture a base snapshot" (None is a real
 #: parent value — the first commit's)
@@ -50,6 +69,14 @@ _UNCHECKED = object()
 #: _read_cache entries kept per table (plans are cheap but not free, and
 #: entries for expired snapshots would otherwise accumulate forever)
 _READ_CACHE_MAX = 32
+
+#: per-subtree schema sidecar written next to the data files (the leading
+#: underscore keeps Spark's own directory listing from reading it as data)
+_SCHEMA_FILE = "_schema.json"
+
+
+def _resolve(summary: dict | Callable[[], dict] | None) -> dict:
+    return dict(summary() if callable(summary) else summary or {})
 
 
 class CommitConflictError(RuntimeError):
@@ -72,6 +99,7 @@ class SnapshotTable:
         # would otherwise pay on every call. This is the moral twin of
         # Iceberg caching manifests for a snapshot.
         self._read_cache: dict[tuple[int, str], DataFrame] = {}
+        self._schemas: dict[str, StructType | None] = {}
         self.data_dir = os.path.join(root, "data")
         self.man_dir = os.path.join(root, "_manifests")
         os.makedirs(self.data_dir, exist_ok=True)
@@ -114,13 +142,16 @@ class SnapshotTable:
         attributes (product name / temporal sampling / cdr / version,
         ``/root/reference/src/c3s_sm/metadata.py:163-177``) — metadata
         that belongs to the TABLE, not to any row."""
-        merged = {**self.props.get("properties", {})}
+        merged = self.properties()
         merged.update({str(k): str(v) for k, v in properties.items()})
         self.props["properties"] = merged
         self._write_props()
 
     def properties(self) -> dict[str, str]:
-        """Current table properties (empty dict when never set)."""
+        """Current table properties (empty dict when never set), re-read
+        from ``table.json`` so another handle's update is visible."""
+        with open(os.path.join(self.man_dir, "table.json")) as f:
+            self.props = json.load(f)
         return dict(self.props.get("properties", {}))
 
     def head(self) -> str | None:
@@ -194,6 +225,10 @@ class SnapshotTable:
                     f"{parent!r} during commit"
                 )
             sid = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
+            if parent is not None and "src_snapshot" not in summary:
+                inherited = self._manifest(parent)["summary"].get("src_snapshot")
+                if inherited is not None:
+                    summary = {**summary, "src_snapshot": inherited}
             manifest = {
                 "snapshot_id": sid,
                 "parent": parent,
@@ -220,15 +255,29 @@ class SnapshotTable:
 
     # ---------------------------------------------------------------- writes
 
-    def _write_files(self, df: DataFrame) -> tuple[str, list[str]]:
-        """Write ``df`` into an immutable per-snapshot subtree; return
-        (subtree, data files relative to the table root)."""
+    def _write_files(self, df: DataFrame | None) -> tuple[str, list[str]]:
+        """Write ``df`` into an immutable per-snapshot subtree and record
+        its schema there; return (subtree, data files relative to the
+        table root). ``None`` writes nothing (a metadata-only commit)."""
+        if df is None:
+            return "", []
         sub = f"s{int(time.time() * 1000):013d}{uuid.uuid4().hex[:6]}"
         out_dir = os.path.join(self.data_dir, sub)
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(out_dir)
+        # the schema a parquet read of this subtree infers: data columns,
+        # then partition columns, all nullable
+        parts = set(self.partition_by)
+        fields = [f for f in df.schema if f.name not in parts] + [
+            df.schema[p] for p in self.partition_by
+        ]
+        recorded = StructType(
+            [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+        )
+        with open(os.path.join(out_dir, _SCHEMA_FILE), "w") as f:
+            f.write(recorded.json())
         files = []
         for dirpath, _dirs, fnames in os.walk(out_dir):
             for fn in fnames:
@@ -267,14 +316,20 @@ class SnapshotTable:
 
     def overwrite_partitions(
         self,
-        df: DataFrame,
-        summary: dict | None = None,
+        df: DataFrame | None,
+        summary: dict | Callable[[], dict] | None = None,
         replace_grain: int | None = None,
         replace_values: list[tuple] | None = None,
     ) -> str:
         """Replace exactly the partitions present in ``df`` (dynamic
         partition overwrite). Idempotent: re-running the same write yields
         the same table state — the engine's resume primitive.
+
+        ``df=None`` writes no data: only ``replace_values`` are dropped,
+        and the commit records ``summary`` (a metadata-only commit). A
+        callable ``summary`` is evaluated after the data write and before
+        the commit, so it may carry figures observed on the write itself
+        (``DataFrame.observe``).
 
         ``replace_grain`` replaces at a COARSER unit: the first
         ``replace_grain`` partition columns define the replace set, and
@@ -292,15 +347,14 @@ class SnapshotTable:
         into them — the "this partition is now empty" half of a static
         overwrite that dynamic mode cannot express.
         """
-        if not self.partition_by:
-            base = self.head()
-            _sub, new_files = self._write_files(df)
-            return self._commit(
-                new_files, "overwrite", summary or {}, expected_parent=base
-            )
         base = self.head()
-        g = len(self.partition_by) if replace_grain is None else replace_grain
         _sub, new_files = self._write_files(df)
+        summary = _resolve(summary)
+        if not self.partition_by:
+            return self._commit(
+                new_files, "overwrite", summary, expected_parent=base
+            )
+        g = len(self.partition_by) if replace_grain is None else replace_grain
         replaced = {
             self._partition_of(f, self.partition_by)[:g] for f in new_files
         }
@@ -318,7 +372,7 @@ class SnapshotTable:
         return self._commit(
             kept + new_files,
             "overwrite_partitions",
-            {**(summary or {}), "replaced_partitions": len(replaced)},
+            {**summary, "replaced_partitions": len(replaced)},
             expected_parent=base,
         )
 
@@ -329,24 +383,47 @@ class SnapshotTable:
 
         Files live under per-snapshot subtrees (``data/s<id>/k=v/...``), so
         each subtree is read with its own ``basePath`` (partition columns
-        survive) and the reads are unioned — a manifest-driven scan, the
-        moral equivalent of Iceberg planning file groups per snapshot.
+        survive) and its recorded schema, and the reads are unioned by
+        name — a manifest-driven scan, the moral equivalent of Iceberg
+        planning file groups per snapshot. Per-subtree schemas matter: a
+        column written as FLOAT by one append and DOUBLE by a later one
+        must be read at each file's own type and widened by the union.
         """
         by_sub: dict[str, list[str]] = {}
         for f in files:
-            rel = os.path.relpath(f, "data")
-            sub = rel.split(os.sep, 1)[0]
-            by_sub.setdefault(sub, []).append(os.path.join(self.root, f))
-        dfs = [
-            spark.read.option(
+            by_sub.setdefault(self._subtree(f), []).append(
+                os.path.join(self.root, f)
+            )
+        dfs = []
+        for sub, paths in sorted(by_sub.items()):
+            reader = spark.read.option(
                 "basePath", os.path.join(self.data_dir, sub)
-            ).parquet(*paths)
-            for sub, paths in sorted(by_sub.items())
-        ]
+            )
+            schema = self._subtree_schema(sub)
+            if schema is not None:
+                reader = reader.schema(schema)
+            dfs.append(reader.parquet(*paths))
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
         return out
+
+    @staticmethod
+    def _subtree(relpath: str) -> str:
+        """The write subtree (``s<id>``) of a data file path."""
+        return os.path.relpath(relpath, "data").split(os.sep, 1)[0]
+
+    def _subtree_schema(self, sub: str) -> StructType | None:
+        """The schema recorded when ``sub`` was written, or None for a
+        subtree written without a record. Subtrees are immutable, so the
+        parsed record is memoized."""
+        if sub not in self._schemas:
+            try:
+                with open(os.path.join(self.data_dir, sub, _SCHEMA_FILE)) as f:
+                    self._schemas[sub] = StructType.fromJson(json.load(f))
+            except FileNotFoundError:
+                self._schemas[sub] = None
+        return self._schemas[sub]
 
     def read(
         self, spark: SparkSession, snapshot_id: str | None = None
@@ -376,7 +453,17 @@ class SnapshotTable:
         until: str | None = None,
     ) -> DataFrame | None:
         """Rows added by DATA-CHANGING snapshots in ``(since, until]``;
-        None if empty.
+        None if empty. A scan of :meth:`incremental_files`."""
+        files = self.incremental_files(since, until)
+        return self._read_files(spark, files) if files else None
+
+    def incremental_files(
+        self, since: str | None, until: str | None = None
+    ) -> list[str]:
+        """Data files holding the rows added by DATA-CHANGING snapshots in
+        ``(since, until]`` (relative to the table root; empty if none).
+        Their partition path segments name the touched partitions with no
+        data scan.
 
         Walks the manifest chain and collects each snapshot's file delta
         vs its parent, skipping ``compact`` commits — a compaction
@@ -409,14 +496,13 @@ class SnapshotTable:
         """
         until = until or self.head()
         if until is None:
-            return None
+            return []
         chain = self.snapshots()
         ids = [m["snapshot_id"] for m in chain]
         if since is not None and since not in ids:
-            # since expired: full rebuild fallback (None when the current
+            # since expired: full rebuild fallback (empty when the current
             # file set is itself empty — e.g. every month retained away)
-            files = self._files(until)
-            return self._read_files(spark, files) if files else None
+            return self._files(until)
         lo = ids.index(since) + 1 if since is not None else 0
         hi = ids.index(until) + 1
         delta: list[str] = []
@@ -449,9 +535,7 @@ class SnapshotTable:
                 if f not in parent_files and f not in seen:
                     seen.add(f)
                     delta.append(f)
-        if not delta:
-            return None
-        return self._read_files(spark, delta)
+        return delta
 
     def delete_partitions(
         self, values: list[tuple], summary: dict | None = None
@@ -461,7 +545,8 @@ class SnapshotTable:
         partitions' files. No data is rewritten or removed from disk —
         time travel to earlier snapshots still sees the rows until
         :meth:`expire_snapshots` reclaims them. Returns the new snapshot
-        id, or None when nothing matched.
+        id, or None when nothing matched. ``[()]`` — the empty prefix —
+        drops every partition (a truncate).
         """
         if not self.partition_by:
             raise ValueError("delete_partitions needs a partitioned table")

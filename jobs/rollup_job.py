@@ -13,7 +13,7 @@ subcommands over the snapshot-table pipeline:
     read      one key's series from a tier (packed-aware point read)
     retention age out month partitions per keep-N-months policy
     maintain  small-file compaction + snapshot expiry
-    status    lineage high-water marks + per-tier coverage
+    status    high-water marks, lineage run counts + per-tier coverage
 
 Cluster launch::
 
@@ -124,7 +124,12 @@ def cmd_status(args) -> None:
     p = _pipeline(args)
     out: dict = {"tiers": {}}
     try:
-        lin = p.lineage.read(p.spark).where("status = 'ok'").collect()
+        lin = (
+            p.lineage.read(p.spark)
+            .where("status = 'ok'")
+            .select("tier", "finished_at", "n_rows")
+            .collect()
+        )
     except FileNotFoundError:
         print(json.dumps({"tiers": {}, "note": "no runs yet"}))
         return
@@ -133,11 +138,12 @@ def cmd_status(args) -> None:
             (r for r in lin if r["tier"] == t), key=lambda r: r["finished_at"]
         )
         if rows:
-            last = rows[-1]
+            # the HWM has one definition, the one refresh uses: the
+            # tier commit's recorded source snapshot
             out["tiers"][t] = {
-                "hwm_snapshot": last["src_snapshot"],
+                "hwm_snapshot": p._hwm(t),
                 "runs": len(rows),
-                "last_rows": last["n_rows"],
+                "last_rows": rows[-1]["n_rows"],
             }
     out["coverage"] = [
         {k: str(v) for k, v in r.asDict().items()}
@@ -220,7 +226,7 @@ def main(argv: list[str] | None = None) -> None:
     s.add_argument("--keep-snapshots", type=int, default=3)
     s.set_defaults(fn=cmd_maintain)
 
-    s = sub.add_parser("status", help="lineage HWMs + coverage")
+    s = sub.add_parser("status", help="HWMs, lineage runs + coverage")
     s.set_defaults(fn=cmd_status)
 
     args = ap.parse_args(argv)
