@@ -119,21 +119,22 @@ def gopher_rules(
     symbol_ratio = (n_hash + n_ellipsis) / nzw
     lines = F.split(t, "\n")
     n_lines = F.nullif(F.size(lines).cast("long"), F.lit(0))
+    q = _sql_ident(text_col)
     bullet = F.size(
         F.expr(
-            f"filter(split({text_col}, '\\n'), l -> "
+            f"filter(split({q}, '\\n'), l -> "
             "ltrim(l) LIKE '-%' OR ltrim(l) LIKE '*%' "
             "OR ltrim(l) LIKE '•%')"
         )
     ).cast("long")
     ell_end = F.size(
         F.expr(
-            f"filter(split({text_col}, '\\n'), l -> rtrim(l) LIKE '%...')"
+            f"filter(split({q}, '\\n'), l -> rtrim(l) LIKE '%...')"
         )
     ).cast("long")
     alpha_words = F.size(
         F.expr(
-            f"filter({_WORDS_SQL(text_col)}, w -> w RLIKE '[A-Za-z]')"
+            f"filter({_WORDS_SQL(q)}, w -> w RLIKE '[A-Za-z]')"
         )
     ).cast("long")
     padded = F.concat(F.lit(" "), F.lower(t), F.lit(" "))
@@ -203,7 +204,7 @@ def c4_rules(
     back and keep terminal lines) without re-parsing.
     """
     t = F.col(text_col)
-    lines_expr = f"split({text_col}, '\\n')"
+    lines_expr = f"split({_sql_ident(text_col)}, '\\n')"
     n_lines = F.size(F.split(t, "\n")).cast("long")
     terminal = F.size(
         F.expr(
@@ -246,6 +247,12 @@ def c4_rules(
         n_sent.alias("n_sentences"),
         F.coalesce(ok, F.lit(False)).alias("pass_c4"),
     )
+
+
+def _sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled), safe to interpolate into an ``F.expr`` string."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _WORDS_SQL(text_col: str) -> str:

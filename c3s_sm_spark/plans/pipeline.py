@@ -38,7 +38,13 @@ Design (Spark-first, scale-first):
   commit and the two bookkeeping appends is repaired by the next
   ``refresh`` or ``maintain`` from metadata alone. The retention horizon
   is a table property (``retention_through``), which survives snapshot
-  expiry.
+  expiry;
+- point reads serve one key's series with no Spark job: the driver
+  picks the key's files from the HEAD manifests by partition path
+  (packed ``bucket=<b>`` blobs, the tail's masked months, or the tier's
+  ``pmonth=*/kb=<b>`` rows), reads them with pyarrow, decodes the blobs
+  with the numpy codecs and returns a local relation. A scan past a
+  byte cap degrades to the Spark scan with the distributed decode.
 """
 
 from __future__ import annotations
@@ -69,11 +75,14 @@ _LINEAGE_COLS = (
     "n_months int, n_rows bigint, wall_s double, finished_at double, "
     "status string, note string"
 )
-#: point reads decode blobs ON THE DRIVER below this blob count (one
-#: blob = up to codecs.CHUNK points, so 512 blobs ~ 4.2M points — far
-#: past any real single-key tier series); beyond it, or when the caller
-#: forces it, the decode runs distributed via unpack_series
-_LOCAL_DECODE_MAX_BLOBS = 512
+#: a point read runs on the driver while each of its scans (packed
+#: blobs, tail rows, tier rows) selects at most this many bytes of files
+#: (stat sizes); past it the read degrades to a Spark scan and the
+#: distributed decode. Set at the measured break-even (4-vCPU VM,
+#: local[4], one bucket's tier files): the driver read cost 0.56 s of
+#: driver+JVM CPU against 1.79 s on Spark at 56 MB, 1.76 s against
+#: 1.50 s at 78 MB
+_LOCAL_READ_MAX_BYTES = 64 << 20
 _METRICS_COLS = (
     "run_id string, tier string, pmonth string, n_rows bigint, n_points bigint, "
     "ts_min timestamp, ts_max timestamp, written_at double"
@@ -105,6 +114,15 @@ def _month_aggs(months: list[str]) -> list[Column]:
 
 def _micros_ts(us: int | None) -> dt.datetime | None:
     return None if us is None else _EPOCH + dt.timedelta(microseconds=us)
+
+
+def _epoch_us(col) -> np.ndarray:
+    """Epoch microseconds of a pyarrow timestamp column (any unit)."""
+    import pyarrow as pa
+
+    return col.cast(pa.timestamp("us", getattr(col.type, "tz", None))).cast(
+        pa.int64()
+    ).to_numpy()
 
 
 def _naive_utc(bound):
@@ -190,6 +208,20 @@ class TierPipeline:
             if "product_full_name" not in tbl.properties():
                 tbl.set_properties(global_attrs(t, "TCDR"))
 
+    def _local_frame(self, rows: list[tuple], schema: str) -> DataFrame:
+        """Driver-built rows as a DataFrame. Built from pandas (via
+        Arrow) it is a local relation: ``createDataFrame(list)`` instead
+        runs a parallelize job and starts Python workers. Object columns
+        keep ints next to None and tz-aware timestamps exact."""
+        import pandas as pd
+
+        names = [f.split()[0] for f in schema.split(",")]
+        pdf = pd.DataFrame(
+            {n: pd.Series([r[i] for r in rows], dtype=object)
+             for i, n in enumerate(names)}
+        )
+        return self.spark.createDataFrame(pdf, schema)
+
     def table_properties(self) -> DataFrame:
         """All tier tables' properties as one relation
         ``(tier, key, value)`` — the engine's relational surface for the
@@ -200,9 +232,7 @@ class TierPipeline:
             for t, tbl in self.tiers.items()
             for k, v in sorted(tbl.properties().items())
         ]
-        return self.spark.createDataFrame(
-            rows, "tier string, key string, value string"
-        )
+        return self._local_frame(rows, "tier string, key string, value string")
 
     # ---------------------------------------------------------------- ingest
 
@@ -299,18 +329,14 @@ class TierPipeline:
                 lin["n_months"], lin["n_rows"], lin["wall_s"],
                 lin["finished_at"], "ok", None,
             )
-            self.lineage.append(
-                self.spark.createDataFrame([row], _LINEAGE_COLS), tag
-            )
+            self.lineage.append(self._local_frame([row], _LINEAGE_COLS), tag)
         if "metrics" in tables and summ["metrics"]:
             rows = [
                 (run_id, tier, m, n, pts, _micros_ts(lo), _micros_ts(hi),
                  lin["finished_at"])
                 for m, n, pts, lo, hi in summ["metrics"]
             ]
-            self.metrics.append(
-                self.spark.createDataFrame(rows, _METRICS_COLS), tag
-            )
+            self.metrics.append(self._local_frame(rows, _METRICS_COLS), tag)
 
     def _recover_bookkeeping(self) -> None:
         """Re-append bookkeeping rows a crash lost. A tier commit
@@ -631,103 +657,118 @@ class TierPipeline:
         # kb is physical layout (key-hash partition level), not schema
         return self.tiers[tier].read(self.spark).drop("kb")
 
-    def _read_packed_local(
-        self,
-        packed: DataFrame,
-        tier: str,
-        key_value,
-        masked: list[str],
-        start: str | None = None,
-        end: str | None = None,
-    ):
-        """Collect pruned packed blobs AND the key's masked-month tail
-        rows in ONE Spark job (tagged union with per-branch limits),
-        decode + mask + merge + ``[start, end]`` trim + ``ts`` sort on the
-        DRIVER with the same numpy codecs; returns a ts-ordered pandas
-        frame, or None past either cap (the
-        ``limit(cap+1)`` probes bound the collect itself, so a
-        pathological key cannot flood the driver — the caller then
-        degrades to the distributed decode). A point read's blob set is
-        bounded by construction (one key, bucket- and sidecar-pruned)
-        and its tail rows likewise (one key, masked months only); the
-        distributed path pays a ~200 ms fixed Python-worker + Arrow
-        round trip per read (r4 bench: 337 ms packed vs 129 ms unpacked
-        — nearly all fixed cost), and a separate tail collect would pay
-        a second job's scheduling on every between-fold read.
-        """
+    def _key_bucket(self, key_value, key_type) -> tuple:
+        """``(bucket, key)``: the key's bucket and the key cast to the
+        stored dtype ``key_type``, from :meth:`_kb` on a one-row local
+        relation — Catalyst folds it on the driver, so no Spark job runs.
+        Cast BEFORE hashing: xxhash64 hashes int and long differently, so
+        an int32-sized Python literal against a LongType column would
+        name the wrong bucket and silently return zero rows."""
         import pandas as pd
+
+        k = F.col("k").cast(key_type)
+        lit = self.spark.createDataFrame(pd.DataFrame({"k": [key_value]}))
+        bucket, key = lit.select(self._kb(k), k).collect()[0]
+        return bucket, key
+
+    def _point_read_local(
+        self,
+        key_value,
+        tier: str,
+        masked: list[str] | None,
+        start: str | None,
+        end: str | None,
+    ) -> DataFrame | None:
+        """:meth:`point_read` on the driver (:meth:`SnapshotTable.scan_local`
+        and the numpy codecs). ``masked`` is None when the unpacked tier
+        serves the read. Only the tail's masked months are read: stale
+        tail rows of other months (a crash between a fold's packed commit
+        and its tail truncate) stay invisible. None — the caller falls
+        back to Spark — when a subtree has no recorded schema, the key
+        does not cast to the stored type, or a scan's files exceed
+        ``_LOCAL_READ_MAX_BYTES``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         from c3s_sm_spark.functions.codecs import decode_ts, decode_vals
 
-        tail_cap = _LOCAL_DECODE_MAX_BLOBS * 1024  # ~ same point budget
-        sel = packed.select(
-            "doc_id",
-            "ts_blob",
-            "v_blob",
-            F.lit(None).cast("timestamp").alias("ts"),
-            F.lit(None).cast("double").alias("v_mean"),
-        ).limit(_LOCAL_DECODE_MAX_BLOBS + 1)
-        if masked:
-            t = self._tail_rows(tier, key_value, masked)
-            if t is not None:
-                sel = sel.unionByName(
-                    t.select(
-                        "doc_id",
-                        F.lit(None).cast("binary").alias("ts_blob"),
-                        F.lit(None).cast("binary").alias("v_blob"),
-                        "ts",
-                        "v_mean",
-                    ).limit(tail_cap + 1)
-                )
-        rows = sel.collect()
-        blobs = [r for r in rows if r["ts_blob"] is not None]
-        tails = [r for r in rows if r["ts_blob"] is None]
-        if len(blobs) > _LOCAL_DECODE_MAX_BLOBS or len(tails) > tail_cap:
-            return None
-        frames = [
-            pd.DataFrame(
-                {
-                    "doc_id": r["doc_id"],
-                    "ts": decode_ts(bytes(r["ts_blob"])).view(
-                        "datetime64[us]"
-                    ),
-                    "v_mean": decode_vals(bytes(r["v_blob"])),
-                }
-            )
-            for r in blobs
-        ]
-        pdf = (
-            pd.concat(frames, ignore_index=True)
-            if frames
-            else pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype=object),
-                    "ts": pd.Series([], dtype="datetime64[us]"),
-                    "v_mean": pd.Series([], dtype=np.float64),
-                }
-            )
+        tbl, key_col = (
+            (self.tiers[tier], self.key) if masked is None
+            else (self.packed[tier], "doc_id")
         )
-        if masked:
-            pdf = pdf[~pdf["ts"].dt.strftime("%Y-%m").isin(masked)]
-            if tails:
-                tail_pdf = pd.DataFrame(
-                    {
-                        "doc_id": [r["doc_id"] for r in tails],
-                        "ts": pd.to_datetime(
-                            [r["ts"] for r in tails]
-                        ).astype("datetime64[us]"),
-                        # _tail_rows already coalesced NULL -> NaN
-                        "v_mean": np.array(
-                            [r["v_mean"] for r in tails], dtype=np.float64
-                        ),
-                    }
-                )
-                pdf = pd.concat([pdf, tail_pdf], ignore_index=True)
-        if start is not None:
-            pdf = pdf[pdf["ts"] >= _naive_utc(start)]
-        if end is not None:
-            pdf = pdf[pdf["ts"] <= _naive_utc(end)]
-        return pdf.sort_values("ts", kind="stable", ignore_index=True)
+        key_type = tbl.recorded_type(key_col)
+        if key_type is None:
+            return None
+        bucket, key = self._key_bucket(key_value, key_type)
+        if key is None:
+            return None
+        lo = None if start is None else np.datetime64(_naive_utc(start).value, "ns")
+        hi = None if end is None else np.datetime64(_naive_utc(end).value, "ns")
+
+        def scan(t: SnapshotTable, parts: dict, cond, columns=("ts", "v_mean")):
+            return t.scan_local(parts, list(columns), cond, _LOCAL_READ_MAX_BYTES)
+
+        def series(rows: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+            # packed blobs store an all-null window as NaN; rows agree
+            v = rows["v_mean"].cast(pa.float64()).fill_null(np.nan)
+            return _epoch_us(rows["ts"]), v.to_numpy()
+
+        if masked is None:
+            blobs = None
+            rows = scan(tbl, {"kb": {str(bucket)}}, pc.field(key_col) == key)
+        else:
+            blobs = scan(
+                tbl, {"bucket": {str(bucket)}}, pc.field("doc_id") == key,
+                ("ts_min", "ts_max", "ts_blob", "v_blob"),
+            )
+            if blobs is None:
+                return None
+            rows = scan(
+                self.tails[tier], {"pmonth": set(masked)},
+                (pc.field("kb") == bucket) & (pc.field("doc_id") == key),
+            )
+        if rows is None:
+            return None
+        parts = [series(rows)]
+        if blobs is not None:
+            ts_min = _epoch_us(blobs["ts_min"]).view("datetime64[us]")
+            ts_max = _epoch_us(blobs["ts_max"]).view("datetime64[us]")
+            for i, (tb, vb) in enumerate(
+                zip(blobs["ts_blob"].to_pylist(), blobs["v_blob"].to_pylist())
+            ):
+                # (ts_min, ts_max) sidecars drop whole blobs before decode
+                if (lo is not None and ts_max[i] < lo) or (
+                    hi is not None and ts_min[i] > hi
+                ):
+                    continue
+                ts, vals = decode_ts(tb), decode_vals(vb)
+                if masked:
+                    month = ts.view("datetime64[us]").astype("datetime64[M]")
+                    live = ~np.isin(month.astype(str), masked)
+                    ts, vals = ts[live], vals[live]
+                parts.append((ts, vals))
+        ts = np.concatenate([p[0] for p in parts]).view("datetime64[us]")
+        vals = np.concatenate([p[1] for p in parts])
+        keep = np.ones(len(ts), dtype=bool)
+        if lo is not None:
+            keep &= ts >= lo
+        if hi is not None:
+            keep &= ts <= hi
+        ts, vals = ts[keep], vals[keep]
+        order = np.argsort(ts, kind="stable")
+        # an Arrow table, not pandas: a local relation even when empty
+        # (an empty pandas frame takes the parallelize path), and NaN
+        # stays NaN (pandas conversion would turn it into NULL)
+        out = pa.table(
+            {
+                "doc_id": pa.array([key] * len(ts)),
+                "ts": pa.array(ts[order], pa.timestamp("us")),
+                "v_mean": pa.array(vals[order], pa.float64()),
+            }
+        )
+        return self.spark.createDataFrame(
+            out, f"doc_id {key_type.simpleString()}, ts timestamp, v_mean double"
+        )
 
     def _tail_rows(
         self, tier: str, key_value, masked: list[str]
@@ -764,39 +805,47 @@ class TierPipeline:
         local_decode: bool | None = None,
     ) -> DataFrame:
         """S5 point time-series query: one key's series, time-ordered,
-        optionally restricted to ``[start, end]``.
+        optionally restricted to ``[start, end]``, as
+        ``(doc_id, ts, v_mean)``.
 
-        Served from the packed table when materialized: bucket-pruned
-        scan, then the ``(ts_min, ts_max)`` sidecar columns drop whole
-        blobs BEFORE any decode (SURVEY.md §4 — min/max pruning instead
-        of a custom Catalyst rule for packed columns), then the exact
-        ``ts`` predicate trims the decoded edge chunks; months superseded
-        since the last fold are masked out of the decode and served from
-        the unpacked tail instead (see :meth:`pack_tier`). The decode
-        itself runs on the driver for normal-sized series
-        (``local_decode`` auto; see :meth:`_decode_packed`) — pass
-        ``False`` to force the distributed ``unpack_series`` path. Falls
-        back to the tier rows when no packed table exists.
+        Served from the packed table when it is current: the key's
+        ``bucket=<b>`` files, whose ``(ts_min, ts_max)`` sidecar columns
+        drop whole blobs BEFORE any decode (SURVEY.md §4 — min/max
+        pruning instead of a custom Catalyst rule for packed columns),
+        then the exact ``ts`` predicate trims the decoded edge chunks;
+        months superseded since the last fold are masked out of the
+        decode and served from the unpacked tail instead (see
+        :meth:`pack_tier`). Without a current packed table the tier rows
+        under ``pmonth=*/kb=<b>`` serve it.
+
+        A normal-sized read runs NO Spark job: the driver reads the
+        manifest-pruned files with pyarrow, decodes with the numpy
+        codecs and returns a local relation (:meth:`_point_read_local`).
+        When one scan's files exceed ``_LOCAL_READ_MAX_BYTES``, or a
+        subtree has no recorded schema, the read degrades to the Spark
+        scan with the distributed ``unpack_series`` decode; pass
+        ``local_decode=False`` to force that path.
         """
+        ptbl = self.packed[tier]
+        head = ptbl.head()
+        psum = ptbl._manifest(head)["summary"] if head else {}
+        # staleness guard: the packed form is a materialization of a
+        # specific tier snapshot; after later ingest+refresh the tier
+        # moves on and the packed table would silently serve OLD data —
+        # serve the (always-current) tier rows until the next pack_tier()
+        current = head is not None and (
+            psum.get("src_snapshot") == self.tiers[tier].head()
+        )
+        masked = list(psum.get("masked_months", [])) if current else None
+        if local_decode is not False:
+            out = self._point_read_local(key_value, tier, masked, start, end)
+            if out is not None:
+                return out
         try:
-            ptbl = self.packed[tier]
-            head = ptbl.head()
-            if head is None:
+            if masked is None:
                 raise FileNotFoundError(ptbl.root)
-            # staleness guard: the packed form is a materialization of a
-            # specific tier snapshot; after later ingest+refresh the tier
-            # moves on and the packed table would silently serve OLD data
-            # — fall back to the (always-current) tier rows until the
-            # next pack_tier()
-            psum = ptbl._manifest(head)["summary"]
-            if psum.get("src_snapshot") != self.tiers[tier].head():
-                raise FileNotFoundError("packed table is stale")
-            masked = list(psum.get("masked_months", []))
             packed = ptbl.read(self.spark)
-            # cast the literal to the stored key dtype BEFORE hashing:
-            # xxhash64 hashes int and long differently, so an int32-sized
-            # Python literal against a LongType column would name the
-            # wrong bucket and silently return zero rows
+            # same dtype-before-hash rule as _key_bucket
             doc_lit = F.lit(key_value).cast(packed.schema["doc_id"].dataType)
             packed = packed.where(
                 (F.col("bucket") == self._kb(doc_lit))
@@ -806,27 +855,6 @@ class TierPipeline:
                 packed = packed.where(F.col("ts_max") >= F.lit(start))
             if end is not None:
                 packed = packed.where(F.col("ts_min") <= F.lit(end))
-            key_type = packed.schema["doc_id"].dataType.simpleString()
-            out_schema = f"doc_id {key_type}, ts timestamp, v_mean double"
-            if local_decode is not False:
-                # driver-side assembly: one Spark job collects blobs +
-                # tail rows, then decode + mask + merge + range trim +
-                # sort happen in pandas, ONE createDataFrame of rows
-                # already in order — the distributed variant pays a
-                # Spark job for the union and another for the masked
-                # filter, and a Spark orderBy three more (range sample,
-                # shuffle, result), on every read
-                pdf = self._read_packed_local(
-                    packed, tier, key_value, masked, start, end
-                )
-                if pdf is not None:
-                    if len(pdf):
-                        return self.spark.createDataFrame(
-                            pdf, schema=out_schema
-                        )
-                    return self.spark.createDataFrame([], out_schema)
-            # distributed decode (caller-forced, or past the local caps):
-            # same semantics, Spark-side mask + tail union
             out = unpack_series(packed)
             if masked:
                 out = out.where(~F.date_format("ts", "yyyy-MM").isin(masked))
@@ -838,7 +866,6 @@ class TierPipeline:
             # to the key's bucket (1/n_buckets of the tier) before the
             # exact key filter touches a row
             tdf = self.tiers[tier].read(self.spark)
-            # same dtype-before-hash rule as the packed branch above
             key_lit = F.lit(key_value).cast(tdf.schema[self.key].dataType)
             out = (
                 tdf.where(
@@ -932,7 +959,7 @@ class TierPipeline:
                 # latest-row-per-(tier, pmonth) would keep reporting the
                 # dropped months' last refresh stats forever
                 self.metrics.append(
-                    self.spark.createDataFrame(
+                    self._local_frame(
                         [
                             (run_id, tier, m, 0, 0, None, None, time.time())
                             for m in old
@@ -941,7 +968,7 @@ class TierPipeline:
                     )
                 )
             self.lineage.append(
-                self.spark.createDataFrame(
+                self._local_frame(
                     [
                         (
                             run_id,

@@ -3729,6 +3729,26 @@ def test_c4_rules_golden(spark):
     assert got[5]["n_sentences"] == 0 and got[5]["pass_c4"] is False
 
 
+def test_rules_quote_the_text_column(spark):
+    """gopher_rules and c4_rules interpolate the text column into SQL
+    lambdas: a column named ``page text`` must give the same signals
+    as one named ``text``."""
+    from c3s_sm_spark.operators.textstats import c4_rules, gopher_rules
+
+    docs = spark.createDataFrame(
+        [
+            (1, " ".join(["the quick brown fox and that dog"] * 4) + "..."),
+            (2, "- bullet one\n- bullet two\nA normal line ends here."),
+            (3, "function() { return 1; }"),
+        ],
+        "doc_id long, text string",
+    )
+    spaced = docs.withColumnRenamed("text", "page text")
+    for rules in (gopher_rules, c4_rules):
+        exp = sorted(rules(docs).collect())
+        assert sorted(rules(spaced, text_col="page text").collect()) == exp
+
+
 def test_dsir_scores_reference(spark):
     """X185 DSIR hashed-ngram importance scores pinned against a pure-
     Python reference: same xxhash64 bucketing (read back from Spark so

@@ -227,12 +227,10 @@ def main() -> None:
         # 12. packed point read: bucket partition-prunes at file listing,
         # doc_id + (ts_min, ts_max) sidecar predicates push into the
         # parquet scan so whole blobs are dropped BEFORE any decode sees
-        # a row. r5: the DEFAULT point read decodes driver-side (its
-        # bounded collect runs this same pruned scan, but the returned
-        # frame is a LocalTableScan — nothing to audit in the final
-        # plan), so the distributed-decode path is pinned explicitly
-        # with local_decode=False; the assertions are identical because
-        # both paths share the pruned `packed` scan.
+        # a row. The DEFAULT point read runs on the driver (pyarrow over
+        # the manifest-pruned bucket files, no Spark plan to audit), so
+        # the Spark path — taken past the byte cap — is pinned
+        # explicitly with local_decode=False.
         p.pack_tier("daily")
         pr = p.point_read(
             "doc0000000003", "daily", start="2019-10-15", end="2019-11-15",
@@ -241,7 +239,7 @@ def main() -> None:
         pr_txt = plan_text(pr)
         sections.append(
             (
-                "packed point read (S5): bucket prune + sidecar min/max pushdown before decode (distributed-decode path; the default driver-local path runs the same pruned scan inside its bounded collect)",
+                "packed point read (S5): bucket prune + sidecar min/max pushdown before decode (Spark path; the default driver path reads the same bucket files with pyarrow)",
                 pr_txt,
                 {
                     "bucket in PartitionFilters": bool(
