@@ -362,8 +362,9 @@ def run_pipeline(spark, sf: float, warmup: bool = True, fused: bool = False) -> 
 
 def run_packed_read(spark) -> dict:
     """Packed-tier read path (r3 verdict task 8): point read latency on
-    the DoD+Gorilla packed form vs the unpacked kb-pruned tier, plus the
-    incremental bucket-repack cost after an append.
+    the DoD+Gorilla packed form vs the unpacked tier (files picked by
+    their recorded kb values), plus the incremental pack cost after an
+    append.
 
     Tier shape: ~2k keys x ~15 months daily (~0.8M rows) — point-read
     latency is governed by partition pruning + per-bucket decode, both
@@ -407,20 +408,14 @@ def run_packed_read(spark) -> dict:
                 best = dt if best is None or dt < best else best
             return best * 1000
 
-        unpacked_ms = _point_ms()  # no packed table yet: kb-pruned fallback
+        unpacked_ms = _point_ms()  # no packed table yet: kb-pruned tier files
         t0 = time.perf_counter()
         p.pack_tier("daily")
         full_pack_s = time.perf_counter() - t0
         packed_ms = _point_ms()
 
-        def _bytes(tbl) -> int:
-            return sum(
-                os.path.getsize(os.path.join(tbl.root, f))
-                for f in tbl._files()
-            )
-
-        tier_bytes = _bytes(p.tiers["daily"])
-        packed_bytes = _bytes(p.packed["daily"])
+        tier_bytes = p.tiers["daily"].live_bytes()
+        packed_bytes = p.packed["daily"].live_bytes()
         # incremental pack after an append of one month for 1/10 of the
         # keys: the delta lands in the unpacked tail (no re-encoding) —
         # each stage timed separately (r4 lumped ingest+refresh+pack into
@@ -435,7 +430,7 @@ def run_packed_read(spark) -> dict:
         p.pack_tier("daily")
         incr_pack_s = time.perf_counter() - t0
         packed_tail_ms = _point_ms()  # read now spans packed + tail
-        tail_bytes = _bytes(p.tails["daily"])
+        tail_bytes = p.tails["daily"].live_bytes()
         # fold: the amortized re-encode (full repack + tail truncate)
         t0 = time.perf_counter()
         p.pack_tier("daily", fold=True)

@@ -7,13 +7,16 @@ append) in one resumable object — the reference's flagship lifecycle
 Design (Spark-first, scale-first):
 
 - every tier is a :class:`~c3s_sm_spark.sources.tableio.SnapshotTable`
-  hive-partitioned by ``pmonth`` (the window-start month). Month is the
-  natural overwrite unit: daily/dekadal/monthly windows never cross a
-  month boundary (3rd dekads end at month end,
+  hive-partitioned by ``pmonth`` (the window-start month) and nothing
+  else. Month is the natural overwrite unit: daily/dekadal/monthly
+  windows never cross a month boundary (3rd dekads end at month end,
   ``/root/reference/src/c3s_sm/download.py:326-333``), so recomputing the
   affected months and *dynamic-partition-overwriting* them is exact,
-  idempotent, and hence crash-resumable by simply re-running — while
-  keeping file counts ~30x lower than day-grain partitions;
+  idempotent, and hence crash-resumable by simply re-running. Inside a
+  month the rows are clustered, not partitioned: a refresh writes at
+  most ``defaultParallelism + months - 1`` files, each one contiguous
+  ``(kb, key)`` range sorted by ``(kb, key, ts)``, where ``kb`` is the
+  key's hash bucket (a data column);
 - each tier refresh is **incremental**: it diffs its *source* table's
   snapshots against the high-water mark (HWM) — the source snapshot the
   tier's own newest commit records as ``src_snapshot`` — and reads the
@@ -40,9 +43,10 @@ Design (Spark-first, scale-first):
   is a table property (``retention_through``), which survives snapshot
   expiry;
 - point reads serve one key's series with no Spark job: the driver
-  picks the key's files from the HEAD manifests by partition path
-  (packed ``bucket=<b>`` blobs, the tail's masked months, or the tier's
-  ``pmonth=*/kb=<b>`` rows), reads them with pyarrow, decodes the blobs
+  picks the key's files from the HEAD manifests (packed ``bucket=<b>``
+  blobs, the tail's masked months, or the tier files whose recorded
+  ``kb`` values hold the key's bucket), reads them with pyarrow —
+  row groups pruned by the ``kb`` and key statistics — decodes the blobs
   with the numpy codecs and returns a local relation. A scan past a
   byte cap degrades to the Spark scan with the distributed decode.
 """
@@ -165,16 +169,22 @@ class TierPipeline:
         self.n_buckets = n_buckets
         self.n_salts = n_salts
         self.raw = SnapshotTable(os.path.join(base_dir, "raw"), ["pmonth"])
-        # tiers carry a second, key-hash partition level: pack_tier's
-        # incremental repack reads "all rows of these key buckets", and
-        # with kb in the path that member scan file-prunes to
-        # touched_buckets/n_buckets of the tier instead of scanning all
-        # of it (the month-only layout's documented 10^12-row weak spot).
-        # The refresh overwrite unit stays the month (replace_grain=1).
-        self.tiers = {
-            t: SnapshotTable(os.path.join(base_dir, t), ["pmonth", "kb"])
-            for t in TIERS
-        }
+        # tiers are partitioned by the month alone, the refresh overwrite
+        # unit; kb is a data column the files are clustered on (see
+        # _compute_tier), so a month is a few files, not n_buckets
+        try:
+            self.tiers = {
+                t: SnapshotTable(
+                    os.path.join(base_dir, t), ["pmonth"], ("kb", key, "ts")
+                )
+                for t in TIERS
+            }
+        except ValueError as e:
+            raise ValueError(
+                f"{e}: the tier layout changed from (pmonth, kb) directories "
+                "to month partitions of (kb, key, ts)-sorted files; rebuild "
+                "the tiers from the raw table under a new base_dir"
+            ) from e
         self.packed = {
             t: SnapshotTable(os.path.join(base_dir, f"{t}_packed"), ["bucket"])
             for t in TIERS
@@ -186,11 +196,15 @@ class TierPipeline:
         # cost. The tail is month-partitioned (refresh recomputes whole
         # months, so every delta month arrives complete and the tail
         # write is an idempotent month overwrite); kb stays a DATA column
-        # for parquet row-group pushdown — the tail is bounded small by
-        # the fold policy, so partition-level kb dirs would only bloat
-        # file counts. Gorilla/Prometheus hot-block + sealed-block shape.
+        # the rows are sorted on, for file and row-group pruning — the
+        # tail is bounded small by the fold policy, so partition-level kb
+        # dirs would only bloat file counts. Gorilla/Prometheus hot-block
+        # + sealed-block shape.
         self.tails = {
-            t: SnapshotTable(os.path.join(base_dir, f"{t}_tail"), ["pmonth"])
+            t: SnapshotTable(
+                os.path.join(base_dir, f"{t}_tail"), ["pmonth"],
+                ("kb", "doc_id", "ts"),
+            )
             for t in TIERS
         }
         #: fold (full repack + tail truncate) once the tail holds more
@@ -247,8 +261,7 @@ class TierPipeline:
         reprocessed rows appended later still win (reference
         ``sort_last``, ``/root/reference/src/c3s_sm/interface.py:347-356``).
         """
-        # a null key would hash to kb=null (__HIVE_DEFAULT_PARTITION__)
-        # and crash every later incremental pack; a null ts has no month.
+        # a null key names no series; a null ts has no month.
         # raise_error costs no extra pass — it fires inside the write job.
         bad = F.col(self.key).isNull() | F.col("ts").isNull()
         pmonth = F.when(
@@ -382,15 +395,19 @@ class TierPipeline:
         out = out.withColumn(
             "pmonth", F.date_format("ts", "yyyy-MM")
         ).withColumn("kb", self._kb())
-        # one shuffle keyed on the partition tuple so the partitionBy
-        # write emits ~one file per (pmonth, kb) dir — without it every
-        # write task opens a file per dir it touches (tasks x months x
-        # buckets small files; measured 3.5x slower end-to-end and a
-        # per-scan task-count tax forever after)
-        return out.repartition(F.col("pmonth"), F.col("kb"))
+        # one range shuffle over (pmonth, kb, key): each write task holds
+        # one contiguous range, so the month-partitioned write emits at
+        # most defaultParallelism + months - 1 files, each a (kb, key)
+        # range of one month, sorted by the table's (kb, key, ts) order,
+        # whose recorded kb values the point read picks files by. Not
+        # one file per month (caps the write's parallelism at the month
+        # count), and not spark.sql.shuffle.partitions ranges (a backfill
+        # would pass the 32-path listing threshold again)
+        n = self.spark.sparkContext.defaultParallelism
+        return out.repartitionByRange(n, "pmonth", "kb", self.key)
 
     def _kb(self, col: str | Column | None = None) -> Column:
-        """Key-bucket partition value: ``pmod(xxhash64(key), n_buckets)``.
+        """Key bucket: ``pmod(xxhash64(key), n_buckets)``.
         One definition shared by the tier writer, pack_tier, and the
         packed table's ``bucket`` column so bucket sets compose."""
         target = self.key if col is None else col
@@ -463,12 +480,7 @@ class TierPipeline:
                         "src_snapshot": src_head, "lineage": lineage,
                         "metrics": metrics}
 
-            # replace_grain=1: the recompute unit is the month — every
-            # (pmonth, kb) file under a recomputed month is superseded,
-            # including buckets the new month data happens not to touch
-            dst_snap = self.tiers[tier].overwrite_partitions(
-                out, summary, replace_grain=1
-            )
+            dst_snap = self.tiers[tier].overwrite_partitions(out, summary)
             man = self.tiers[tier]._manifest(dst_snap)
             self._record(tier, man)
             lin = man["summary"]["lineage"]
@@ -483,13 +495,6 @@ class TierPipeline:
         return report
 
     # ---------------------------------------------------------------- packed
-
-    def _table_bytes(self, tbl: SnapshotTable) -> int:
-        """On-disk bytes of a table's current snapshot (manifest walk +
-        stat; Iceberg manifests carry file sizes, this layer stats)."""
-        return sum(
-            os.path.getsize(os.path.join(tbl.root, f)) for f in tbl._files()
-        )
 
     def _truncate_tail(self, tier: str, summary: dict | None = None) -> None:
         """Drop every tail row after a fold (the packed table is current
@@ -529,9 +534,9 @@ class TierPipeline:
         ~every bucket, so bucket-grain repack re-encoded the whole table
         while wearing an "incremental" label — measured at full-repack
         cost for a 10% key delta. Month-masking works because refresh
-        recomputes WHOLE months (``replace_grain=1``): every delta month
-        arrives complete, so "packed minus masked months, plus tail" is
-        exactly the tier. A retention drop (``delete_partitions``)
+        recomputes WHOLE months (the tiers' only partition level): every
+        delta month arrives complete, so "packed minus masked months,
+        plus tail" is exactly the tier. A retention drop (``delete_partitions``)
         degrades to a fold (months vanished below the mask's horizon); a
         rewrite-only window (compaction) advances the source snapshot
         with a data-free commit carrying the mask forward. Months named
@@ -592,9 +597,9 @@ class TierPipeline:
             if fold is None:
                 # pre-append tail size: the threshold crossing lags one
                 # pack call, which only delays the fold by one delta
-                fold = self._table_bytes(
-                    self.tails[tier]
-                ) > self.tail_fold_frac * max(self._table_bytes(ptbl), 1)
+                fold = self.tails[tier].live_bytes() > self.tail_fold_frac * max(
+                    ptbl.live_bytes(), 1
+                )
             if not fold:
                 tail_df = None
                 delta = tbl.read_incremental(self.spark, prev_src, head)
@@ -654,7 +659,7 @@ class TierPipeline:
     # ----------------------------------------------------------------- reads
 
     def read_tier(self, tier: str) -> DataFrame:
-        # kb is physical layout (key-hash partition level), not schema
+        # kb is physical layout (the key-hash clustering column), not schema
         return self.tiers[tier].read(self.spark).drop("kb")
 
     def _key_bucket(self, key_value, key_type) -> tuple:
@@ -705,8 +710,11 @@ class TierPipeline:
         lo = None if start is None else np.datetime64(_naive_utc(start).value, "ns")
         hi = None if end is None else np.datetime64(_naive_utc(end).value, "ns")
 
-        def scan(t: SnapshotTable, parts: dict, cond, columns=("ts", "v_mean")):
-            return t.scan_local(parts, list(columns), cond, _LOCAL_READ_MAX_BYTES)
+        def scan(t: SnapshotTable, parts: dict, cond, columns=("ts", "v_mean"),
+                 holds=None):
+            return t.scan_local(
+                parts, list(columns), cond, _LOCAL_READ_MAX_BYTES, holds
+            )
 
         def series(rows: pa.Table) -> tuple[np.ndarray, np.ndarray]:
             # packed blobs store an all-null window as NaN; rows agree
@@ -715,7 +723,10 @@ class TierPipeline:
 
         if masked is None:
             blobs = None
-            rows = scan(tbl, {"kb": {str(bucket)}}, pc.field(key_col) == key)
+            rows = scan(
+                tbl, {}, (pc.field("kb") == bucket) & (pc.field(key_col) == key),
+                holds={"kb": bucket},
+            )
         else:
             blobs = scan(
                 tbl, {"bucket": {str(bucket)}}, pc.field("doc_id") == key,
@@ -726,6 +737,7 @@ class TierPipeline:
             rows = scan(
                 self.tails[tier], {"pmonth": set(masked)},
                 (pc.field("kb") == bucket) & (pc.field("doc_id") == key),
+                holds={"kb": bucket},
             )
         if rows is None:
             return None
@@ -815,8 +827,9 @@ class TierPipeline:
         then the exact ``ts`` predicate trims the decoded edge chunks;
         months superseded since the last fold are masked out of the
         decode and served from the unpacked tail instead (see
-        :meth:`pack_tier`). Without a current packed table the tier rows
-        under ``pmonth=*/kb=<b>`` serve it.
+        :meth:`pack_tier`). Without a current packed table the tier
+        serves it: the files whose recorded ``kb`` values hold the key's
+        bucket, row groups pruned by the ``kb`` and key statistics.
 
         A normal-sized read runs NO Spark job: the driver reads the
         manifest-pruned files with pyarrow, decodes with the numpy
@@ -862,9 +875,9 @@ class TierPipeline:
                 if tail_out is not None:
                     out = out.unionByName(tail_out)
         except FileNotFoundError:
-            # kb partition predicate: the fallback point read file-prunes
-            # to the key's bucket (1/n_buckets of the tier) before the
-            # exact key filter touches a row
+            # the kb predicate folds to a literal and is pushed into the
+            # scan: row groups outside the key's bucket are skipped on
+            # their footer statistics before the exact key filter
             tdf = self.tiers[tier].read(self.spark)
             key_lit = F.lit(key_value).cast(tdf.schema[self.key].dataType)
             out = (

@@ -27,12 +27,22 @@ behind a thin interface that an Iceberg catalog can replace verbatim:
   its immutable subtree, and reads hand it to ``spark.read.schema``, so
   planning a scan launches no footer-inference job. Subtrees written
   without a record fall back to inference.
+- **sort order and recorded file stats per write**: a table built with
+  ``sort_by`` (Iceberg's table sort order) sorts every write, compaction
+  included, inside its tasks by the partition columns then ``sort_by``.
+  Every write reads each new file's parquet footer on the driver
+  (pyarrow, no Spark job) and records its rows, bytes, the min/max of
+  its integer columns and the distinct values of the leading ``sort_by``
+  column in a ``_stats.json`` sidecar next to ``_schema.json`` —
+  Iceberg's per-file manifest entries. Subtrees never change, so the
+  records need no carry-forward between manifests.
 - **driver-side scans**: ``scan_local`` reads the HEAD files under given
-  partition values with pyarrow — partition selection by file path, a
-  column projection, a row filter pushed into each file's row groups,
-  and a byte cap (stat sizes, checked before any read) past which it
-  returns None — so a small lookup (a point read) runs no Spark job.
-  ``recorded_type`` gives a column's recorded type for such a lookup.
+  partition values with pyarrow — partition selection by file path, file
+  selection by recorded column values, a column projection, a row filter
+  pushed into each file's row groups, and a byte cap (recorded sizes,
+  checked before any read) past which it returns None — so a small
+  lookup (a point read) runs no Spark job. ``recorded_type`` gives a
+  column's recorded type for such a lookup.
 - **metadata-only commits**: ``overwrite_partitions(None, ...)`` and
   ``delete_partitions`` commit a manifest without running any Spark
   write; the summary is the payload (a consumer's recorded source
@@ -45,6 +55,7 @@ Layout::
 
     <root>/data/s<snapshot>/<partition dirs>/*.parquet   (immutable)
     <root>/data/s<snapshot>/_schema.json                 (written schema)
+    <root>/data/s<snapshot>/_stats.json                  (per-file stats)
     <root>/_manifests/snap-<id>.json                     (immutable)
     <root>/_manifests/HEAD                               (atomic pointer)
     <root>/_manifests/table.json                         (table properties)
@@ -72,13 +83,43 @@ from pyspark.sql.types import DataType, StructField, StructType
 #: parent value — the first commit's)
 _UNCHECKED = object()
 
-#: _read_cache entries kept per table (plans are cheap but not free, and
-#: entries for expired snapshots would otherwise accumulate forever)
-_READ_CACHE_MAX = 32
-
-#: per-subtree schema sidecar written next to the data files (the leading
-#: underscore keeps Spark's own directory listing from reading it as data)
+#: per-subtree schema and file-stats sidecars written next to the data
+#: files (the leading underscore keeps Spark's own directory listing from
+#: reading them as data)
 _SCHEMA_FILE = "_schema.json"
+_STATS_FILE = "_stats.json"
+
+
+def _file_stats(path: str, distinct: tuple[str, ...]) -> dict:
+    """Rows, bytes and integer-column ``min``/``max`` of a parquet file
+    from its footer (a column without statistics in some row group gets
+    no range), plus the distinct ``values`` of the ``distinct`` columns
+    (a leading sort column: long runs, a cheap column read)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    lo: dict[str, int] = {}
+    hi: dict[str, int] = {}
+    for j in range(md.num_columns):
+        col = md.schema.column(j)
+        if col.physical_type not in ("INT32", "INT64") or (
+            col.logical_type.type not in ("NONE", "INT")
+        ):
+            continue
+        stats = [
+            md.row_group(i).column(j).statistics for i in range(md.num_row_groups)
+        ]
+        if stats and all(s is not None and s.has_min_max for s in stats):
+            lo[col.path] = min(s.min for s in stats)
+            hi[col.path] = max(s.max for s in stats)
+    values = {
+        c: sorted(
+            pq.read_table(path, columns=[c])[c].unique().drop_null().to_pylist()
+        )
+        for c in distinct
+    }
+    return {"rows": md.num_rows, "bytes": os.path.getsize(path), "min": lo,
+            "max": hi, "values": values}
 
 
 def _resolve(summary: dict | Callable[[], dict] | None) -> dict:
@@ -93,19 +134,20 @@ class CommitConflictError(RuntimeError):
 
 
 class SnapshotTable:
-    """A partitioned Parquet table with atomic snapshot commits."""
+    """A partitioned Parquet table with atomic snapshot commits. Rows of
+    every data file are sorted by ``sort_by`` (after the partition
+    columns); the caller distributes them over files."""
 
-    def __init__(self, root: str, partition_by: list[str] | None = None):
+    def __init__(
+        self,
+        root: str,
+        partition_by: list[str] | None = None,
+        sort_by: tuple[str, ...] = (),
+    ):
         self.root = root
-        # snapshot-id -> DataFrame memo for read(): snapshots are
-        # immutable, so the planned scan over a snapshot's file list can
-        # be reused verbatim. Planning an explicit-file-list read lists
-        # every path, with a Spark listing job past 32 paths: 1.6-2.2 s of
-        # driver+JVM CPU for a 64-file daily tier on 4 cores. A full
-        # pack_tier re-reads the tier snapshot the next tier's refresh
-        # has just planned, and pays that again without the memo.
-        self._read_cache: dict[tuple[int, str], DataFrame] = {}
-        self._schemas: dict[str, StructType | None] = {}
+        self.sort_by = tuple(sort_by)
+        # (subtree, sidecar name) -> parsed record; subtrees are immutable
+        self._sidecars: dict[tuple[str, str], object] = {}
         self.data_dir = os.path.join(root, "data")
         self.man_dir = os.path.join(root, "_manifests")
         os.makedirs(self.data_dir, exist_ok=True)
@@ -263,12 +305,15 @@ class SnapshotTable:
 
     def _write_files(self, df: DataFrame | None) -> tuple[str, list[str]]:
         """Write ``df`` into an immutable per-snapshot subtree and record
-        its schema there; return (subtree, data files relative to the
-        table root). ``None`` writes nothing (a metadata-only commit)."""
+        its schema and its files' footer stats there; return (subtree,
+        data files relative to the table root). ``None`` writes nothing
+        (a metadata-only commit)."""
         if df is None:
             return "", []
         sub = f"s{int(time.time() * 1000):013d}{uuid.uuid4().hex[:6]}"
         out_dir = os.path.join(self.data_dir, sub)
+        if self.sort_by:
+            df = df.sortWithinPartitions(*self.partition_by, *self.sort_by)
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
@@ -284,14 +329,17 @@ class SnapshotTable:
         )
         with open(os.path.join(out_dir, _SCHEMA_FILE), "w") as f:
             f.write(recorded.json())
-        files = []
+        stats = {}
         for dirpath, _dirs, fnames in os.walk(out_dir):
             for fn in fnames:
                 if fn.endswith(".parquet"):
-                    files.append(
-                        os.path.relpath(os.path.join(dirpath, fn), self.root)
+                    path = os.path.join(dirpath, fn)
+                    stats[os.path.relpath(path, self.root)] = _file_stats(
+                        path, self.sort_by[:1]
                     )
-        return sub, files
+        with open(os.path.join(out_dir, _STATS_FILE), "w") as f:
+            json.dump(stats, f)
+        return sub, list(stats)
 
     def append(self, df: DataFrame, summary: dict | None = None) -> str:
         """Atomically add ``df``'s rows; returns the new snapshot id.
@@ -341,11 +389,12 @@ class SnapshotTable:
         ``replace_grain`` partition columns define the replace set, and
         every existing file under a touched coarse partition is dropped
         even when the new data has no rows for its sub-partition. A table
-        hive-partitioned ``(pmonth, kb)`` whose recompute unit is the
-        month needs ``replace_grain=1`` — plain dynamic overwrite would
-        leave a stale ``(pmonth, kb)`` file behind whenever a recomputed
-        month no longer has rows for that key bucket (Iceberg's static
-        ``REPLACE WHERE`` on the month predicate vs dynamic mode).
+        partitioned ``(region, day)`` whose recompute unit is the region
+        needs ``replace_grain=1`` — plain dynamic overwrite would leave a
+        stale ``(region, day)`` file behind whenever a recomputed region
+        no longer has rows for that day (Iceberg's static ``REPLACE
+        WHERE`` on the region predicate vs dynamic mode);
+        ``replace_grain=0`` replaces every partition (a full rebuild).
 
         ``replace_values`` adds an EXPLICIT static replace set (partition
         value tuples, prefix-matched like :meth:`delete_partitions`):
@@ -419,17 +468,42 @@ class SnapshotTable:
         """The write subtree (``s<id>``) of a data file path."""
         return os.path.relpath(relpath, "data").split(os.sep, 1)[0]
 
+    def _sidecar(self, sub: str, name: str):
+        """The JSON record ``name`` written with subtree ``sub``, or None
+        for a subtree written without one (memoized: subtrees are
+        immutable)."""
+        if (sub, name) not in self._sidecars:
+            try:
+                with open(os.path.join(self.data_dir, sub, name)) as f:
+                    self._sidecars[sub, name] = json.load(f)
+            except FileNotFoundError:
+                self._sidecars[sub, name] = None
+        return self._sidecars[sub, name]
+
     def _subtree_schema(self, sub: str) -> StructType | None:
         """The schema recorded when ``sub`` was written, or None for a
-        subtree written without a record. Subtrees are immutable, so the
-        parsed record is memoized."""
-        if sub not in self._schemas:
-            try:
-                with open(os.path.join(self.data_dir, sub, _SCHEMA_FILE)) as f:
-                    self._schemas[sub] = StructType.fromJson(json.load(f))
-            except FileNotFoundError:
-                self._schemas[sub] = None
-        return self._schemas[sub]
+        subtree written without a record."""
+        rec = self._sidecar(sub, _SCHEMA_FILE)
+        return None if rec is None else StructType.fromJson(rec)
+
+    def file_stats(self, relpath: str) -> dict | None:
+        """``rows``, ``bytes``, integer-column ``min``/``max`` and the
+        leading sort column's ``values`` recorded when a data file was
+        written (None: no record)."""
+        return (self._sidecar(self._subtree(relpath), _STATS_FILE) or {}).get(
+            relpath
+        )
+
+    def _file_bytes(self, relpath: str) -> int:
+        st = self.file_stats(relpath)
+        if st is None:
+            return os.path.getsize(os.path.join(self.root, relpath))
+        return st["bytes"]
+
+    def live_bytes(self) -> int:
+        """On-disk bytes of HEAD's files, from the stats records (a stat
+        call only for a file written without one)."""
+        return sum(map(self._file_bytes, self._files()))
 
     def recorded_type(self, column: str) -> DataType | None:
         """``column``'s type as recorded by the writes HEAD's files come
@@ -450,42 +524,56 @@ class SnapshotTable:
         columns: list[str],
         row_filter,
         max_bytes: int,
+        holds: dict[str, int] | None = None,
     ):
         """Read HEAD's files under the given partition values on the
         driver with pyarrow — no Spark job. ``partitions`` maps partition
         columns to the values to keep (read off each file's path, like
         Spark's partition pruning; unnamed columns match every value);
-        ``columns`` projects data columns and ``row_filter`` (a
-        ``pyarrow.compute`` expression) is pushed into each file's row
-        groups. Returns a ``pyarrow.Table``, or None when the selected
-        files hold more than ``max_bytes`` on disk, checked by stat
-        before any read — the caller then degrades to a Spark scan. No
-        file selected gives an empty table with null-typed columns.
-        Timestamps come back as ``timestamp[us]``: Spark's INT96 values
-        read at the unit Spark itself keeps."""
+        ``holds`` maps data columns to a value a file must hold: a file
+        whose recorded ``values``, or else ``[min, max]``
+        (:meth:`file_stats`), exclude it is skipped, a file without a
+        record is kept. ``columns`` projects
+        data columns and ``row_filter`` (a ``pyarrow.compute``
+        expression) is pushed into each file's row groups. Returns a
+        ``pyarrow.Table``, or None when the selected files hold more than
+        ``max_bytes`` on disk, checked before any read — the caller then
+        degrades to a Spark scan. No file selected gives an empty table
+        with null-typed columns. Timestamps come back as
+        ``timestamp[us]``: Spark's INT96 values read at the unit Spark
+        itself keeps."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        def held(f: str) -> bool:
+            st = self.file_stats(f)
+            return st is None or all(
+                x in st["values"][c] if c in st["values"]
+                else st["min"].get(c, x) <= x <= st["max"].get(c, x)
+                for c, x in (holds or {}).items()
+            )
+
         names = list(partitions)
-        paths = [
-            os.path.join(self.root, f)
+        files = [
+            f
             for f in self._files()
             if all(
                 v in partitions[k]
                 for k, v in zip(names, self._partition_of(f, names))
             )
+            and held(f)
         ]
-        if sum(map(os.path.getsize, paths)) > max_bytes:
+        if sum(map(self._file_bytes, files)) > max_bytes:
             return None
-        if not paths:
+        if not files:
             return pa.table({c: pa.nulls(0) for c in columns})
         return pa.concat_tables(
             [
                 pq.read_table(
-                    p, columns=columns, filters=row_filter,
-                    coerce_int96_timestamp_unit="us",
+                    os.path.join(self.root, f), columns=columns,
+                    filters=row_filter, coerce_int96_timestamp_unit="us",
                 )
-                for p in paths
+                for f in files
             ],
             promote_options="permissive",
         )
@@ -494,22 +582,10 @@ class SnapshotTable:
         self, spark: SparkSession, snapshot_id: str | None = None
     ) -> DataFrame:
         """Scan the table at HEAD or a past snapshot (time travel)."""
-        sid = snapshot_id or self.head()
-        if sid is not None:
-            memo = self._read_cache.get((id(spark), sid))
-            if memo is not None:
-                return memo
         files = self._files(snapshot_id)
         if not files:
             raise FileNotFoundError(f"table {self.root} is empty")
-        df = self._read_files(spark, files)
-        if sid is not None:
-            # bounded FIFO: entries for superseded/expired snapshots must
-            # not accumulate for the driver's lifetime
-            while len(self._read_cache) >= _READ_CACHE_MAX:
-                self._read_cache.pop(next(iter(self._read_cache)))
-            self._read_cache[(id(spark), sid)] = df
-        return df
+        return self._read_files(spark, files)
 
     def read_incremental(
         self,
@@ -616,7 +692,7 @@ class SnapshotTable:
         if not self.partition_by:
             raise ValueError("delete_partitions needs a partitioned table")
         # prefix match: a tuple shorter than partition_by drops every
-        # sub-partition under it (month drop on a (pmonth, kb) table)
+        # sub-partition under it (a region drop on a (region, day) table)
         drop = {tuple(str(x) for x in v) for v in values}
         lens = {len(v) for v in drop}
         base = self.head()
@@ -650,8 +726,9 @@ class SnapshotTable:
         ~``target_rows_per_file``-row files, commit as one data-preserving
         snapshot. Incremental appends (one file set per ingest) are what
         fragment partitions; at 10^12 rows an uncompacted month would pay
-        a task per tiny file on every scan. Returns the new snapshot id,
-        or None when nothing needed compacting.
+        a task per tiny file on every scan. The rewritten files keep the
+        table's sort order. Returns the new snapshot id, or None when
+        nothing needed compacting.
         """
         from collections import Counter
 

@@ -139,11 +139,15 @@ def cmd_status(args) -> None:
         )
         if rows:
             # the HWM has one definition, the one refresh uses: the
-            # tier commit's recorded source snapshot
+            # tier commit's recorded source snapshot; live files come from
+            # the HEAD manifest and bytes from the write-time stats
+            # records (no stat call, no job)
             out["tiers"][t] = {
                 "hwm_snapshot": p._hwm(t),
                 "runs": len(rows),
                 "last_rows": rows[-1]["n_rows"],
+                "files": len(p.tiers[t]._files()),
+                "bytes": p.tiers[t].live_bytes(),
             }
     out["coverage"] = [
         {k: str(v) for k, v in r.asDict().items()}
@@ -159,8 +163,8 @@ def cmd_status(args) -> None:
         if head is None:
             continue
         summ = ptbl._manifest(head)["summary"]
-        pb = p._table_bytes(ptbl)
-        tb = p._table_bytes(p.tails[t])
+        pb = ptbl.live_bytes()
+        tb = p.tails[t].live_bytes()
         packed[t] = {
             "src_snapshot": summ.get("src_snapshot"),
             "stale": summ.get("src_snapshot") != p.tiers[t].head(),

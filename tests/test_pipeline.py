@@ -800,29 +800,92 @@ def test_pack_tier_auto_folds_when_tail_outgrows_packed(
     assert got == exp and got
 
 
-def test_tier_layout_is_month_and_key_bucket(spark, tmp_path, raw_points):
-    """Tier files carry both partition levels; the pack member scan's
-    kb predicate therefore file-prunes (PLANS.md §pack-bucket-prune)."""
-    p = TierPipeline(spark, str(tmp_path / "tp"))
+@pytest.fixture(scope="module")
+def clustered(spark, raw_points, tmp_path_factory):
+    """Base path of a pipeline that ingested ``raw_points`` and refreshed
+    every tier once (three months). Tests that change it use a copy."""
+    base = str(tmp_path_factory.mktemp("clustered") / "tp")
+    p = TierPipeline(spark, base)
     p.ingest(raw_points)
-    p.refresh(["daily"])
-    files = p.tiers["daily"]._files()
-    assert files
-    assert all("pmonth=" in f and "kb=" in f for f in files)
-    # partition pruning: the kb predicate must land in the FileScan's
-    # PartitionFilters (file-listing-time pruning), NOT PushedFilters /
-    # post-scan Filter — i.e. unmatched buckets' files are never opened
-    import re
+    p.refresh()
+    return base
 
+
+def test_tier_files_are_month_clustered(spark, clustered, monkeypatch):
+    """A refresh writes each month as a few (kb, key, ts)-sorted files
+    whose recorded kb range and values are their rows', and an
+    unpacked-tier point read opens only the files holding the key's
+    bucket."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StringType
+
+    p = TierPipeline(spark, clustered)
+    cap = spark.sparkContext.defaultParallelism + 3 - 1
+    for tier, tbl in p.tiers.items():
+        files = tbl._files()
+        assert 3 <= len(files) <= cap, (tier, files)
+        assert not any("kb=" in f for f in files)
+        for f in files:
+            got = [
+                (r["kb"], r["doc_id"], r["ts"])
+                for r in pq.read_table(
+                    os.path.join(tbl.root, f), columns=["kb", "doc_id", "ts"],
+                    coerce_int96_timestamp_unit="us",
+                ).to_pylist()
+            ]
+            assert got == sorted(got), (tier, f)
+            st = tbl.file_stats(f)
+            assert st["rows"] == len(got)
+            assert (st["min"]["kb"], st["max"]["kb"]) == (got[0][0], got[-1][0])
+            assert st["values"]["kb"] == sorted({r[0] for r in got})
+    key = "doc0000000003"
+    bucket, _ = p._key_bucket(key, StringType())
     tbl = p.tiers["daily"]
-    full = tbl.read(spark)
-    kbs = sorted({int(r["kb"]) for r in full.select("kb").distinct().collect()})
-    assert len(kbs) > 1  # 40 keys over 32 buckets: several occupied
-    one = tbl.read(spark).where(F.col("kb").isin([kbs[0]]))
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"PartitionFilters: \[[^\]]*kb", plan), plan
-    # and the filtered read returns exactly that bucket's rows
-    assert one.select("kb").distinct().collect()[0]["kb"] == kbs[0]
+    holding = sorted(
+        os.path.join(tbl.root, f)
+        for f in tbl._files()
+        if bucket in tbl.file_stats(f)["values"]["kb"]
+    )
+    assert 0 < len(holding) < len(tbl._files())
+    opened = []
+    read_table = pq.read_table
+    monkeypatch.setattr(
+        pq, "read_table",
+        lambda path, **kw: opened.append(path) or read_table(path, **kw),
+    )
+    got = p.point_read(key, "daily").collect()
+    assert sorted(opened) == holding
+    monkeypatch.undo()
+    assert got == p.point_read(key, "daily", local_decode=False).collect()
+    assert len(got) == p.read_tier("daily").where(F.col("doc_id") == key).count()
+
+
+def test_old_tier_layout_fails_loudly(spark, tmp_path):
+    """A base dir whose tiers are (pmonth, kb)-partitioned is refused."""
+    SnapshotTable(str(tmp_path / "tp" / "daily"), ["pmonth", "kb"])
+    with pytest.raises(ValueError, match="tier layout changed"):
+        TierPipeline(spark, str(tmp_path / "tp"))
+
+
+def test_point_reads_equal_after_maintain(spark, clustered, tmp_path):
+    """Compaction rewrites the tier files (kept sorted, with stats): the
+    unpacked-tier point reads return what they returned before."""
+    import shutil
+
+    shutil.copytree(clustered, tmp_path / "tp")
+    p = TierPipeline(spark, str(tmp_path / "tp"))
+    reads = [
+        (k, t) for k in ("doc0000000003", "doc0000000021") for t in ("daily", "dekadal")
+    ]
+    before = [p.point_read(k, t).collect() for k, t in reads]
+    files = p.tiers["daily"]._files()
+    assert p.maintain()["daily"]["compacted"]
+    assert set(p.tiers["daily"]._files()).isdisjoint(files)
+    assert all(p.tiers["daily"].file_stats(f) for f in p.tiers["daily"]._files())
+    assert [p.point_read(k, t).collect() for k, t in reads] == before
+    assert all(before)
 
 
 def test_pack_tier_masks_months_of_overwrite_dropped_keys(

@@ -230,7 +230,9 @@ def test_status_hwm_is_the_refresh_hwm(spark, tmp_path, raw_points, refreshed):
     )
     p.refresh(["daily"])
     buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
+    with contextlib.redirect_stdout(buf), pytest.MonkeyPatch.context() as mp:
+        # the file sizes come from the write-time stats, not from stat
+        mp.setattr(os.path, "getsize", None)
         rollup_job.cmd_status(
             argparse.Namespace(base=p.base, master=None, cmd="status")
         )
@@ -238,4 +240,11 @@ def test_status_hwm_is_the_refresh_hwm(spark, tmp_path, raw_points, refreshed):
     for t in ("daily", "dekadal", "monthly"):
         assert st["tiers"][t]["hwm_snapshot"] == p._hwm(t)
     assert st["tiers"]["daily"]["runs"] == 2
+    # live files and bytes come from the manifest and the stats records
+    for t, tbl in p.tiers.items():
+        files = tbl._files()
+        assert st["tiers"][t]["files"] == len(files) > 0
+        assert st["tiers"][t]["bytes"] == sum(
+            os.path.getsize(os.path.join(tbl.root, f)) for f in files
+        )
     assert st["tiers"]["dekadal"]["hwm_snapshot"] != p.tiers["daily"].head()

@@ -190,13 +190,14 @@ def main() -> None:
         )
     )
 
-    # 11. kb bucket scan: tier tables are (pmonth, kb)-partitioned; the
-    # kb predicate must land in the scan's PartitionFilters
-    # (file-listing-time pruning: only the named buckets' files are ever
-    # opened), not as a row filter. r5 note: pack_tier's incremental
-    # path no longer scans members at all (it tail-appends the delta);
-    # this layout is what the point-read FALLBACK (kb == hash(key)) and
-    # any caller-side bucket-restricted read prune on
+    # 11. kb bucket scan: tier tables are partitioned by pmonth only and
+    # each month's files are (kb, key, ts)-sorted ranges, so a kb
+    # predicate is a data filter pushed into the parquet scan (row groups
+    # outside the buckets are skipped on their footer statistics), and
+    # a refreshed tier stays under Spark's 32-path listing threshold.
+    # This is what the point-read FALLBACK (kb == hash(key)) and any
+    # caller-side bucket-restricted read prune on; the default point
+    # read picks files by their recorded kb values on the driver
     import re
     import shutil
     import tempfile
@@ -211,15 +212,16 @@ def main() -> None:
         p.refresh(["daily"])
         member = p.tiers["daily"].read(spark).where(F.col("kb").isin([0, 1, 2]))
         mtxt = plan_text(member)
+        n_files = re.search(r"InMemoryFileIndex \[[^\]]*?(\d+) entries\]", mtxt)
         sections.append(
             (
-                "pack-bucket-prune: (pmonth, kb) tier layout, kb IN-list prunes at file listing (point-read fallback / bucket-restricted reads)",
+                "tier-bucket-prune: month-partitioned tiers, kb IN-list pushed into the parquet scan (point-read fallback / bucket-restricted reads)",
                 mtxt,
                 {
-                    "kb predicate in PartitionFilters": bool(
-                        re.search(r"PartitionFilters: \[[^\]]*kb", mtxt)
+                    "kb predicate in PushedFilters": bool(
+                        re.search(r"PushedFilters: \[[^\]]*In\(kb", mtxt)
                     ),
-                    "kb not a data filter": "PushedFilters: [In(kb" not in mtxt,
+                    "scan covers <= 32 files": (int(n_files.group(1)) if n_files else 1) <= 32,
                 },
             )
         )
