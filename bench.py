@@ -258,7 +258,7 @@ def _exec(df) -> int:
     return -1
 
 
-def run_pipeline(spark, sf: float, warmup: bool = True, fused: bool = False) -> dict:
+def run_pipeline(spark, sf: float, warmup: bool = True) -> dict:
     """Flagship: synth input_hint table -> cascade -> all three tiers.
 
     Mirrors the production pipeline shape: every tier is materialized to
@@ -268,13 +268,6 @@ def run_pipeline(spark, sf: float, warmup: bool = True, fused: bool = False) -> 
     a Parquet sink at the 40M-row tier size (measured 232s vs 60s), and
     a union of un-materialized chains recomputes the daily agg three
     times. The sink+scan cost is part of the honest number.
-
-    ``fused=True`` builds the daily tier with
-    :func:`~c3s_sm_spark.synth.daily_tier_fused` — per-day aggregation
-    INSIDE the token arrays (doc-major input => daily windows never
-    cross rows => zero shuffle; bit-parity with the explode path pinned
-    in tests). Reported separately as ``pipeline_fused`` so the
-    explode-path number stays comparable across rounds.
     """
     import shutil
     import tempfile
@@ -282,11 +275,7 @@ def run_pipeline(spark, sf: float, warmup: bool = True, fused: bool = False) -> 
     from pyspark.sql import functions as F
 
     from c3s_sm_spark.operators.rollup import cascade, rollup
-    from c3s_sm_spark.synth import (
-        daily_tier_fused,
-        gen_sequences,
-        sequences_to_points,
-    )
+    from c3s_sm_spark.synth import gen_sequences, sequences_to_points
 
     n_docs = max(2000, int(PIPELINE_DOCS_PER_SF * sf))
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -303,7 +292,7 @@ def run_pipeline(spark, sf: float, warmup: bool = True, fused: bool = False) -> 
         # from earlier queries are dropped so the flagship runs against a
         # clean executor heap.
         spark.catalog.clearCache()
-        run_pipeline(spark, sf, warmup=False, fused=fused)
+        run_pipeline(spark, sf, warmup=False)
     seq = gen_sequences(spark, n_docs, n_partitions=n_parts)
     # tier sink on tmpfs when available: a cluster's sink bandwidth scales
     # with executor count (node-local NVMe / object-store fan-out); a
@@ -328,8 +317,6 @@ def run_pipeline(spark, sf: float, warmup: bool = True, fused: bool = False) -> 
             # rejoin from the key dim only at point-read time
             if tier != "daily":
                 out = cascade(src, ["doc_key"], tier)
-            elif fused:
-                out = daily_tier_fused(seq)
             else:
                 out = rollup(
                     sequences_to_points(seq), ["doc_key"], "ts", tier, **kwargs
@@ -470,12 +457,6 @@ for _ in range(3):  # pass 1 doubles as the JIT warm-up; report steady state
     r = run_pipeline(spark, {sf}, warmup=False)
     if best is None or r["sec"] < best["sec"]:
         best = r
-fused = None
-for _ in range(2):  # JIT already warm from the explode passes
-    r = run_pipeline(spark, {sf}, warmup=False, fused=True)
-    if fused is None or r["sec"] < fused["sec"]:
-        fused = r
-best["fused"] = fused
 # same-JVM contention probe (see main()): the flagship number is only
 # comparable across rounds relative to this
 from pyspark.sql import functions as F
@@ -579,7 +560,6 @@ def main() -> None:
         "host_probe_ratio": round(pbest / 0.495, 2),
     }
     if pipeline:
-        out["pipeline_fused"] = pipeline.pop("fused", None)
         out["pipeline"] = pipeline
     if packed_read:
         out["packed_read"] = packed_read

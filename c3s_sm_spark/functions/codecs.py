@@ -32,7 +32,8 @@ val blob: u8 magic=0xD1 | u8 ver=1 | u32 n | f64 v0
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
+
+from c3s_sm_spark.functions.per_key import per_key_ordered
 
 _TS_MAGIC = 0xD0
 _VAL_MAGIC = 0xD1
@@ -339,15 +340,14 @@ def pack_series(
 ):
     """Packer: one (or more, chunked) packed row per series key.
 
-    Physical strategy: ``repartition(key)`` + ``sortWithinPartitions(key,
-    ts)`` + partition-level ``mapInPandas`` — NOT per-group
+    Physical strategy: :func:`~c3s_sm_spark.functions.per_key.per_key_ordered`
+    partitions + partition-level ``mapInPandas`` — NOT per-group
     ``applyInPandas``. A grouped-map ships one Arrow batch per GROUP,
     whose round-trip overhead dwarfs the codec at realistic key counts
     (measured: identity applyInPandas over 1500 groups/40k rows = 4-7 s
     vs 1.1 s for the whole codec single-threaded); one batch stream per
-    PARTITION amortizes that to ~nothing. The repartition guarantees a
-    key's rows are complete within one partition, and the sort both
-    replaces the per-group sort and keeps the groupby order-stable.
+    PARTITION amortizes that to ~nothing. Unlike the per-key ordered
+    map, the encode STREAMS the partition instead of concatenating it.
     Inside, everything is numpy bit-packing — zero per-row Python.
     Sidecar columns ``(ts_min, ts_max, n)`` give min/max pruning on the
     packed table (SURVEY.md §4: predicates prune without decoding).
@@ -431,16 +431,8 @@ def pack_series(
             _drain(rows, final=True)
             yield pd.DataFrame(rows, columns=_COLS)
 
-    # explicit partition count: a bare repartition(col) lets AQE coalesce
-    # a small shuffle down to ONE partition, serializing the whole pack
-    # on a single task (measured 5 s -> 0.6 s at 1500 series); the codec
-    # work below is invisible to AQE's size-based estimate
-    if n_partitions is None:
-        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    prepared = (
-        df.select(key, ts_col, val_col)
-        .repartition(n_partitions, F.col(key))
-        .sortWithinPartitions(key, ts_col)
+    prepared = per_key_ordered(
+        df.select(key, ts_col, val_col), [key], [ts_col], n_partitions
     )
     return prepared.mapInPandas(
         _pack_partition,

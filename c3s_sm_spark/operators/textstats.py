@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from c3s_sm_spark.functions.per_key import per_key_ordered_map
+
 #: tiny high-frequency English stopword markers for the lang-id heuristic
 _EN_MARKERS = (" the ", " and ", " of ", " to ", " is ")
 
@@ -2096,8 +2098,9 @@ def burst_detect(
     Scale shape: per-``(bucket, token)`` counts (one map-side-combined
     shuffle); per-bucket totals broadcast back; the per-token
     timeline (gap-filled with zero-count buckets — the automaton
-    needs silence too) is vocabulary × B rows, shuffled ONCE on token
-    into a sorted-partition Viterbi kernel (series length = B, tiny).
+    needs silence too) is vocabulary × B rows, run through the per-key
+    ordered map on token (one shuffle, a Viterbi kernel per token over
+    its bucket-ordered series of length B, tiny).
     ``min_count`` prunes the long tail before the timeline build.
 
     Decode is deterministic: float costs are evaluated in fixed
@@ -2204,50 +2207,26 @@ def burst_detect(
     ).collect()[0]
     n_tot, n_buckets = int(n_total_row["nt"]), int(n_total_row["nb"])
 
-    def _burst_partition(batches):
+    def _burst(kv, rows):
         import pandas as pd
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            parts[0]
-            if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
+        buckets = rows["bucket"].tolist()
+        res = _viterbi(
+            rows["k"].tolist(),
+            rows["n"].tolist(),
+            int(rows["k_tot"].iloc[0]),
+            n_tot,
+            n_buckets,
         )
-        out = []
-        for token, g in pdf.groupby("token", sort=False):
-            buckets = g["bucket"].tolist()
-            res = _viterbi(
-                g["k"].tolist(),
-                g["n"].tolist(),
-                int(g["k_tot"].iloc[0]),
-                n_tot,
-                n_buckets,
-            )
-            for a, b, nb, wt in res:
-                out.append(
-                    (token, buckets[a], buckets[b], nb, wt)
-                )
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "token", "start_bucket", "end_bucket",
-                    "n_bursty", "weight",
-                ],
-            )
+        return pd.DataFrame(
+            [(kv[0], buckets[a], buckets[b], nb, wt) for a, b, nb, wt in res],
+            columns=["token", "start_bucket", "end_bucket", "n_bursty", "weight"],
+        )
 
-    return (
-        grid.repartition("token")
-        .sortWithinPartitions("token", "bucket")
-        .mapInPandas(
-            _burst_partition,
-            schema=(
-                "token string, start_bucket bigint, end_bucket bigint, "
-                "n_bursty bigint, weight double"
-            ),
-        )
+    return per_key_ordered_map(
+        grid, ["token"], ["bucket"], _burst,
+        "token string, start_bucket bigint, end_bucket bigint, "
+        "n_bursty bigint, weight double",
     )
 
 

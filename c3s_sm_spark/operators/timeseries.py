@@ -15,6 +15,19 @@ range/cross join anywhere, so the plans survive 10^12-row inputs as
 long as a single key's series fits a task (the same contract the
 reference's per-cell reshuffle already imposes).
 
+Per-key contract: every order-dependent operator that needs a key's
+whole series (EWMA, LTTB, Holt and Holt-Winters, SWI, Croston,
+Whittaker, matrix profile, BinSeg, PELT, isotonic blocks,
+Mann-Kendall, Sen's slope) runs on ONE helper,
+:func:`c3s_sm_spark.functions.per_key.per_key_ordered_map`:
+
+- width: a hash shuffle on the keys into ``n_partitions`` partitions,
+  by default 2x ``defaultParallelism`` (AQE may coalesce a bare
+  ``repartition(keys)`` into one task);
+- order: each kernel call sees one key's rows sorted by the time
+  column (then the tiebreak, where the operator takes one);
+- null keys: null-key rows form one series, as in Spark's ``groupBy``.
+
 Skew note (100 TB): these operators partition by the series key. A
 pathological hot key (one user with 10^9 events) serializes into one
 task; the mitigation is the same key-salting used by the writer path
@@ -45,6 +58,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from c3s_sm_spark.functions.per_key import key_ddl, per_key_ordered_map
 
 
 def asof_join(
@@ -527,45 +542,26 @@ def ewma(
     """Exponentially weighted moving average per key (pandas
     ``ewm(alpha=..., adjust=False).mean()`` recurrence:
     ``s_t = alpha*v_t + (1-alpha)*s_{t-1}``). Inherently order-recursive,
-    so no window expression exists; the physical strategy is the packed
-    codec's (codecs.py:pack_series): ``repartition(keys)`` +
-    ``sortWithinPartitions(keys, ts)`` + partition-level ``mapInPandas``
-    — one Arrow batch stream per PARTITION (a per-group applyInPandas
-    round-trips one batch per key, measured 4-7x slower at realistic key
-    counts), vectorized ``pandas.groupby.ewm`` inside, zero per-row
-    Python. Each key's series is complete and sorted within one
-    partition, so the float recurrence is deterministic under ANY
-    cluster partitioning — the north rule's bit-for-bit requirement
-    holds even though the values are floats.
+    so no window expression exists; runs as a pandas ``ewm`` per key on
+    the per-key ordered map (module docstring), so the float recurrence
+    is deterministic under ANY cluster partitioning — the north rule's
+    bit-for-bit requirement holds even though the values are floats.
     """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    keys = list(keys)
-    cols = df.columns
     # build a FRESH StructType: StructType.add() mutates the receiver,
     # and df.schema hands back the live object — mutating it corrupts df
     out_schema = StructType(
         list(df.schema.fields) + [StructField(out_col, DoubleType())]
     )
 
-    def _ewma_partition(batches):
-        import pandas as pd
-
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-        pdf[out_col] = (
-            pdf.groupby(keys, sort=False)[value_col]
-            .transform(lambda s: s.ewm(alpha=alpha, adjust=False).mean())
+    def _ewma(_, rows):
+        return rows.assign(
+            **{out_col: rows[value_col].ewm(alpha=alpha, adjust=False).mean()}
         )
-        yield pdf
 
-    part = df.repartition(n_partitions, *keys) if n_partitions else df.repartition(*keys)
-    return (
-        part.sortWithinPartitions(*keys, ts_col)
-        .mapInPandas(_ewma_partition, schema=out_schema)
-        .select(*cols, out_col)
+    return per_key_ordered_map(
+        df, keys, [ts_col], _ewma, out_schema, n_partitions
     )
 
 
@@ -584,14 +580,11 @@ def lttb(
     previously kept point and the next bucket's centroid. Preserves
     visual extremes that uniform striding destroys.
 
-    Same physical pattern as :func:`ewma` (repartition + sorted
-    partition-level mapInPandas); numpy inside, O(n) per key. Keys with
-    ``<= n_out`` points pass through untouched. Emits the kept rows only
-    (keys, ts, value).
+    Runs on the per-key ordered map (module docstring); numpy inside,
+    O(n) per key. Keys with ``<= n_out`` points pass through untouched.
+    Emits the kept rows only (keys, ts, value).
     """
-    keys = list(keys)
     src = df.select(*keys, ts_col, value_col)
-    out_schema = src.schema
 
     def _lttb_one(t, v, n):
         import numpy as np
@@ -614,24 +607,13 @@ def lttb(
         keep.append(len(t) - 1)
         return np.asarray(keep)
 
-    def _lttb_partition(batches):
-        import numpy as np  # noqa: F401
-        import pandas as pd
+    def _lttb(_, rows):
+        t = rows[ts_col].to_numpy(dtype="datetime64[us]").view("int64").astype("float64")
+        v = rows[value_col].to_numpy(dtype="float64")
+        return rows.iloc[_lttb_one(t, v, n_out)]
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-        out = []
-        for _, g in pdf.groupby(keys, sort=False):
-            t = g[ts_col].to_numpy(dtype="datetime64[us]").view("int64").astype("float64")
-            v = g[value_col].to_numpy(dtype="float64")
-            out.append(g.iloc[_lttb_one(t, v, n_out)])
-        yield pd.concat(out, ignore_index=True)
-
-    part = src.repartition(n_partitions, *keys) if n_partitions else src.repartition(*keys)
-    return part.sortWithinPartitions(*keys, ts_col).mapInPandas(
-        _lttb_partition, schema=out_schema
+    return per_key_ordered_map(
+        src, keys, [ts_col], _lttb, src.schema, n_partitions
     )
 
 
@@ -991,6 +973,11 @@ def _time_chunk(df: DataFrame, ts_field: str, n_chunks: int):
     defaults to cores*8 so a uniformly-spread hot key splits ~8 ways
     per core. The driver-side min/max probe is two longs — bounded at
     any scale (and served from parquet footer stats when available).
+
+    Cost note: ``df`` is evaluated once by the min/max probe here and
+    again by each downstream pass of the calling operator. A caller
+    whose input has expensive lineage (a join, a wide aggregate, a
+    Python UDF) should ``persist()`` it first.
     """
     row = df.agg(
         F.min(F.unix_timestamp(ts_field)).alias("mn"),
@@ -2502,11 +2489,9 @@ def mann_kendall_pieces(
     :func:`mann_kendall_scores` / :func:`sen_slope` — the witness never
     divides. Values must be integers (pre-scale floats).
 
-    Plan + bound: one hash shuffle on ``keys``, then a per-key Arrow
-    kernel — pair counting is vectorized numpy (O(n^2) work, O(n)
-    memory), same per-key-series-fits-a-task contract as the other
-    order-dependent operators in this module (see module docstring).
-    For series beyond ~10^5 points use the parametric ``trend`` pieces
+    Plan + bound: the per-key ordered map (module docstring) — pair
+    counting is vectorized numpy (O(n^2) work, O(n) memory). For
+    series beyond ~10^5 points use the parametric ``trend`` pieces
     (one pass) or pre-aggregate to a coarser grain first.
     """
     import numpy as np
@@ -2514,17 +2499,13 @@ def mann_kendall_pieces(
 
     keys = list(keys)
     order = [ts_col] + ([tiebreak] if tiebreak else [])
-    out_schema = ", ".join(
-        [f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys]
-        + [
-            "n long", "n_pos long", "n_neg long", "n_zero long",
-            "s long", "tie_term long", "var18 long",
-        ]
+    out_schema = (
+        f"{key_ddl(df, keys)}, n long, n_pos long, n_neg long, "
+        "n_zero long, s long, tie_term long, var18 long"
     )
 
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        v = pdf["__v"].to_numpy(np.int64)
+    def _one(kv, rows: pd.DataFrame) -> pd.DataFrame:
+        v = rows["__v"].to_numpy(np.int64)
         n = len(v)
         pos = neg = 0
         for i in range(n - 1):
@@ -2536,9 +2517,8 @@ def mann_kendall_pieces(
         t = counts.astype(np.int64)
         tie_term = int((t * (t - 1) * (2 * t + 5)).sum())
         var18 = n * (n - 1) * (2 * n + 5) - tie_term
-        head = {k: pdf[k].iloc[0] for k in keys}
         return pd.DataFrame([{
-            **head, "n": n, "n_pos": pos, "n_neg": neg,
+            **dict(zip(keys, kv)), "n": n, "n_pos": pos, "n_neg": neg,
             "n_zero": npairs - pos - neg, "s": pos - neg,
             "tie_term": tie_term, "var18": var18,
         }])
@@ -2546,7 +2526,7 @@ def mann_kendall_pieces(
     prepared = df.select(
         *keys, *order, F.col(value_col).cast("long").alias("__v")
     )
-    return prepared.groupBy(*keys).applyInPandas(_one, out_schema)
+    return per_key_ordered_map(prepared, keys, order, _one, out_schema)
 
 
 def mann_kendall_scores(pieces: DataFrame) -> DataFrame:
@@ -2596,22 +2576,18 @@ def sen_slope(
     practice; scipy ``theilslopes`` semantics, float median like scipy
     — float output -> pytest-pinned against brute force, never
     hash-oracled). Same O(n^2)-per-key vectorized-numpy bound as the
-    MK kernel."""
+    MK kernel, on the same per-key ordered map."""
     import numpy as np
     import pandas as pd
 
     keys = list(keys)
     order = [ts_col] + ([tiebreak] if tiebreak else [])
-    out_schema = ", ".join(
-        [f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys]
-        + ["n_slopes long", "slope double"]
-    )
+    out_schema = f"{key_ddl(df, keys)}, n_slopes long, slope double"
     unit = float(x_unit_s)
 
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        v = pdf["__v"].to_numpy(np.int64)
-        x = pdf["__x"].to_numpy(np.int64)
+    def _one(kv, rows: pd.DataFrame) -> pd.DataFrame:
+        v = rows["__v"].to_numpy(np.int64)
+        x = rows["__x"].to_numpy(np.int64)
         n = len(v)
         slopes = []
         for i in range(n - 1):
@@ -2620,7 +2596,7 @@ def sen_slope(
             m = dx != 0
             if m.any():
                 slopes.append(dy[m].astype(np.float64) * unit / dx[m])
-        head = {k: pdf[k].iloc[0] for k in keys}
+        head = dict(zip(keys, kv))
         if not slopes:
             return pd.DataFrame([{**head, "n_slopes": 0, "slope": None}])
         allsl = np.concatenate(slopes)
@@ -2635,7 +2611,7 @@ def sen_slope(
         F.col(value_col).cast("long").alias("__v"),
         F.unix_timestamp(F.col(ts_col)).cast("long").alias("__x"),
     )
-    return prepared.groupBy(*keys).applyInPandas(_one, out_schema)
+    return per_key_ordered_map(prepared, keys, order, _one, out_schema)
 
 
 def allan_pieces(
@@ -2826,13 +2802,11 @@ def holt_smooth(
     initialized ``l_0 = v_0``, ``b_0 = v_1 - v_0`` (``b_0 = 0`` for
     one-point series). Appends ``out_level`` and ``out_trend``.
 
-    Physical strategy is :func:`ewma`'s: ``repartition(keys)`` +
-    ``sortWithinPartitions`` + partition-level ``mapInPandas`` with a
-    vectorized-per-series numpy recurrence — each key's series complete
-    and sorted in one partition, so the float recurrence is
-    deterministic under any cluster partitioning. Order-recursive by
-    nature -> rows-only (no ANSI-SQL twin); pinned against a pure-python
-    reference loop in pytest.
+    A numpy recurrence per key on the per-key ordered map (module
+    docstring), so the float recurrence is deterministic under any
+    cluster partitioning. Order-recursive by nature -> rows-only (no
+    ANSI-SQL twin); pinned against a pure-python reference loop in
+    pytest.
     """
     import numpy as np
 
@@ -2840,8 +2814,6 @@ def holt_smooth(
 
     if not (0 < alpha <= 1) or not (0 <= beta <= 1):
         raise ValueError(f"need 0<alpha<=1, 0<=beta<=1, got {alpha}, {beta}")
-    keys = list(keys)
-    cols = df.columns
     out_schema = StructType(
         list(df.schema.fields)
         + [StructField(out_level, DoubleType()), StructField(out_trend, DoubleType())]
@@ -2859,33 +2831,12 @@ def holt_smooth(
             tr[t] = beta * (lev[t] - prev) + (1 - beta) * tr[t - 1]
         return lev, tr
 
-    def _holt_partition(batches):
-        import pandas as pd
+    def _holt(_, rows):
+        lev, tr = _holt_one(rows[value_col].to_numpy(np.float64))
+        return rows.assign(**{out_level: lev, out_trend: tr})
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-        lev = np.empty(len(pdf), dtype=np.float64)
-        tr = np.empty(len(pdf), dtype=np.float64)
-        for _, idx in pdf.groupby(keys, sort=False).indices.items():
-            gl, gt = _holt_one(
-                pdf[value_col].to_numpy(np.float64)[idx]
-            )
-            lev[idx], tr[idx] = gl, gt
-        pdf[out_level] = lev
-        pdf[out_trend] = tr
-        yield pdf
-
-    part = (
-        df.repartition(n_partitions, *keys)
-        if n_partitions
-        else df.repartition(*keys)
-    )
-    return (
-        part.sortWithinPartitions(*keys, ts_col)
-        .mapInPandas(_holt_partition, schema=out_schema)
-        .select(*cols, out_level, out_trend)
+    return per_key_ordered_map(
+        df, keys, [ts_col], _holt, out_schema, n_partitions
     )
 
 
@@ -4002,14 +3953,12 @@ def swi_filter(
     SWI_{n-1})``. Limit behavior pinned in tests: T -> inf gives the
     exact running mean (K_n = 1/n), T -> 0 tracks the raw series.
 
-    Physical strategy: the :func:`ewma` shape — ``repartition(keys)``
-    + ``sortWithinPartitions`` + partition-level ``mapInPandas`` (one
-    Arrow stream per partition, each key's series complete and sorted
-    inside it — deterministic under any cluster partitioning). The
-    K-recursion is state-dependent (not a fixed-alpha ewm), so inside
-    the batch it folds in a per-series numpy loop: O(series length)
-    Python steps per KEY (not per raw point at corpus scale — this
-    runs on rolled-up tiers), the same trade stream_holt documents.
+    Runs on the per-key ordered map (module docstring) — deterministic
+    under any cluster partitioning. The K-recursion is state-dependent
+    (not a fixed-alpha ewm), so each series folds in a numpy loop:
+    O(series length) Python steps per KEY (not per raw point at corpus
+    scale — this runs on rolled-up tiers), the same trade stream_holt
+    documents.
     Null values are passed through untouched without advancing the
     filter state (a null can't move SWI, and the next gap spans it).
 
@@ -4024,58 +3973,40 @@ def swi_filter(
 
     if ctime_days <= 0:
         raise ValueError(f"ctime_days must be > 0, got {ctime_days}")
-    keys = list(keys)
     out_schema = StructType(
         list(df.schema.fields)
         + [StructField(out_col, DoubleType()), StructField("swi_gain", DoubleType())]
     )
     t_char = float(ctime_days)
 
-    def _swi_partition(batches):
+    def _swi(_, rows):
         import numpy as np
         import pandas as pd
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-
-        def _fold(g: pd.DataFrame) -> pd.DataFrame:
-            t = (
-                pd.to_datetime(g[ts_col]).to_numpy().astype("datetime64[us]")
-                .astype(np.int64) / 86_400_000_000.0
-            )
-            v = g[value_col].to_numpy(dtype=np.float64)
-            swi = np.full(len(v), np.nan)
-            gain = np.full(len(v), np.nan)
-            s = k = None
-            last_t = None
-            for i in range(len(v)):
-                if np.isnan(v[i]):
-                    continue
-                if s is None:
-                    s, k = v[i], 1.0
-                else:
-                    e = math.exp(-(t[i] - last_t) / t_char)
-                    k = k / (k + e)
-                    s = s + k * (v[i] - s)
-                last_t = t[i]
-                swi[i], gain[i] = s, k
-            g = g.copy()
-            g[out_col] = swi
-            g["swi_gain"] = gain
-            return g
-
-        yield pd.concat(
-            [_fold(g) for _, g in pdf.groupby(keys, sort=False)],
-            ignore_index=True,
+        t = (
+            pd.to_datetime(rows[ts_col]).to_numpy().astype("datetime64[us]")
+            .astype(np.int64) / 86_400_000_000.0
         )
+        v = rows[value_col].to_numpy(dtype=np.float64)
+        swi = np.full(len(v), np.nan)
+        gain = np.full(len(v), np.nan)
+        s = k = None
+        last_t = None
+        for i in range(len(v)):
+            if np.isnan(v[i]):
+                continue
+            if s is None:
+                s, k = v[i], 1.0
+            else:
+                e = math.exp(-(t[i] - last_t) / t_char)
+                k = k / (k + e)
+                s = s + k * (v[i] - s)
+            last_t = t[i]
+            swi[i], gain[i] = s, k
+        return rows.assign(**{out_col: swi, "swi_gain": gain})
 
-    n = n_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
-    return (
-        df.repartition(n, *keys)
-        .sortWithinPartitions(*keys, ts_col)
-        .mapInPandas(_swi_partition, schema=out_schema)
+    return per_key_ordered_map(
+        df, keys, [ts_col], _swi, out_schema, n_partitions
     )
 
 
@@ -4532,9 +4463,8 @@ def matrix_profile_sad(
     start_ts, mp, mp_idx)`` — profile value and the position of the
     nearest neighbor (ties break to the smallest index).
 
-    Scale shape: one shuffle on ``keys``, then a sorted partition-level
-    numpy kernel (the :func:`ewma`/:func:`lttb` per-series contract —
-    a key's series fits a task). The kernel is diagonal-vectorized:
+    Scale shape: the per-key ordered map (module docstring — a key's
+    series fits a task). The kernel is diagonal-vectorized:
     for each offset ``d`` the elementwise gaps ``|a_t − a_{t+d}|``
     roll into all window SADs of that diagonal via one cumulative sum
     — O(n²) work per series but O(n) numpy passes, no Python inner
@@ -4575,60 +4505,34 @@ def matrix_profile_sad(
             mpi[j] = np.where(upd, i, mpi[j])
         return mp, mpi
 
-    def _mp_partition(batches):
+    def _mp(kv, rows):
         import numpy as np
         import pandas as pd
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            parts[0]
-            if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
+        mp, mpi = _mp_one(rows[value_col].to_numpy(dtype=np.int64))
+        if mp is None:
+            return None
+        # no admissible neighbor (series shorter than the exclusion
+        # zone allows): NULL, never the INF sentinel
+        mp_out = pd.array(mp, dtype="Int64")
+        mp_out[mpi == -1] = None
+        return pd.DataFrame(
+            {
+                **dict(zip(keys, kv)),
+                "idx": np.arange(len(mp), dtype=np.int64),
+                "start_ts": rows[ts_col].iloc[: len(mp)].to_numpy(),
+                "mp": mp_out,
+                "mp_idx": mpi,
+            }
         )
-        out = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            kv = kv if isinstance(kv, tuple) else (kv,)
-            v = g[value_col].to_numpy(dtype=np.int64)
-            mp, mpi = _mp_one(v)
-            if mp is None:
-                continue
-            # no admissible neighbor (series shorter than the exclusion
-            # zone allows): NULL, never the INF sentinel
-            mp_out = pd.array(mp, dtype="Int64")
-            mp_out[mpi == -1] = None
-            sub = pd.DataFrame(
-                {
-                    "idx": np.arange(len(mp), dtype=np.int64),
-                    "start_ts": g[ts_col].iloc[: len(mp)].to_numpy(),
-                    "mp": mp_out,
-                    "mp_idx": mpi,
-                }
-            )
-            for c, val in zip(keys, kv):
-                sub[c] = val
-            out.append(sub[[*keys, "idx", "start_ts", "mp", "mp_idx"]])
-        if out:
-            yield pd.concat(out, ignore_index=True)
 
-    key_types = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name in keys
-    )
     ts_type = src.schema[ts_col].dataType.simpleString()
     out_schema = (
-        f"{key_types}, idx bigint, start_ts {ts_type}, "
+        f"{key_ddl(src, keys)}, idx bigint, start_ts {ts_type}, "
         "mp bigint, mp_idx bigint"
     )
-    part = (
-        src.repartition(n_partitions, *keys)
-        if n_partitions
-        else src.repartition(*keys)
-    )
-    return part.sortWithinPartitions(*keys, ts_col).mapInPandas(
-        _mp_partition, schema=out_schema
+    return per_key_ordered_map(
+        src, keys, [ts_col], _mp, out_schema, n_partitions
     )
 
 
@@ -4664,10 +4568,10 @@ def binseg_changepoints(
     sums; larger series should pre-aggregate (daily tiers) first,
     exactly like the other quadratic-sensitive witnesses.
 
-    Scale shape: one shuffle on ``keys``, then a sorted-partition
+    Scale shape: the per-key ordered map (module docstring) with a
     numpy kernel (prefix sums + vectorized argmax per segment; the
     greedy loop runs ``max_changes`` times over a segment list of the
-    same size) — the :func:`ewma`/:func:`lttb` per-series contract.
+    same size).
     Rows-only (a greedy recursion has no ANSI-SQL twin); pinned
     against a pure-Python reference in tests/test_timeseries.py.
     """
@@ -4712,48 +4616,27 @@ def binseg_changepoints(
             found.append((t, sc))
         return found
 
-    def _binseg_partition(batches):
+    def _binseg(kv, rows):
         import numpy as np
         import pandas as pd
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            parts[0]
-            if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
+        v = rows[value_col].to_numpy(dtype=np.int64)
+        ts = rows[ts_col].to_numpy()
+        return pd.DataFrame(
+            [
+                (*kv, rank, t, ts[t], sc)
+                for rank, (t, sc) in enumerate(_binseg_one(v), start=1)
+            ],
+            columns=[*keys, "cp_rank", "idx", "cp_ts", "score"],
         )
-        out = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            kv = kv if isinstance(kv, tuple) else (kv,)
-            v = g[value_col].to_numpy(dtype=np.int64)
-            ts = g[ts_col].to_numpy()
-            for rank, (t, sc) in enumerate(_binseg_one(v), start=1):
-                out.append((*kv, rank, t, ts[t], sc))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[*keys, "cp_rank", "idx", "cp_ts", "score"],
-            )
 
-    key_types = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name in keys
-    )
     ts_type = src.schema[ts_col].dataType.simpleString()
     out_schema = (
-        f"{key_types}, cp_rank bigint, idx bigint, "
+        f"{key_ddl(src, keys)}, cp_rank bigint, idx bigint, "
         f"cp_ts {ts_type}, score bigint"
     )
-    part = (
-        src.repartition(n_partitions, *keys)
-        if n_partitions
-        else src.repartition(*keys)
-    )
-    return part.sortWithinPartitions(*keys, ts_col).mapInPandas(
-        _binseg_partition, schema=out_schema
+    return per_key_ordered_map(
+        src, keys, [ts_col], _binseg, out_schema, n_partitions
     )
 
 
@@ -4788,8 +4671,8 @@ def holt_winters_seasonal(
     ``l_{t-1} + b_{t-1} + s_{t-m}``; the first ``period`` points
     report their initialization values).
 
-    Physical strategy is :func:`holt_smooth`'s sorted-partition numpy
-    recurrence — deterministic under any cluster partitioning
+    A numpy recurrence per key on the per-key ordered map (module
+    docstring) — deterministic under any cluster partitioning
     (sequential float ops in fixed time order). Rows-only (recursive;
     no ANSI-SQL twin); pinned against a pure-Python reference loop in
     pytest.
@@ -4806,7 +4689,6 @@ def holt_winters_seasonal(
     m = int(period)
     if m < 2:
         raise ValueError(f"period must be >= 2, got {period}")
-    keys = list(keys)
     out_schema = StructType(
         list(df.schema.fields)
         + [
@@ -4843,38 +4725,16 @@ def holt_winters_seasonal(
             l_prev, b_prev = l_t, b_t
         return lev, tr, sea, fit
 
-    def _hw_partition(batches):
-        import pandas as pd
-
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            parts[0]
-            if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
+    def _hw(_, rows):
+        if len(rows) < 2 * m:
+            return None
+        lev, tr, sea, fit = _hw_one(rows[value_col].to_numpy(np.float64))
+        return rows.assign(
+            hw_level=lev, hw_trend=tr, hw_season=sea, hw_fitted=fit
         )
-        out = []
-        for _, g in pdf.groupby(keys, sort=False):
-            if len(g) < 2 * m:
-                continue
-            lev, tr, sea, fit = _hw_one(
-                g[value_col].to_numpy(np.float64)
-            )
-            g = g.copy()
-            g["hw_level"], g["hw_trend"] = lev, tr
-            g["hw_season"], g["hw_fitted"] = sea, fit
-            out.append(g)
-        if out:
-            yield pd.concat(out, ignore_index=True)
 
-    part = (
-        df.repartition(n_partitions, *keys)
-        if n_partitions
-        else df.repartition(*keys)
-    )
-    return part.sortWithinPartitions(*keys, ts_col).mapInPandas(
-        _hw_partition, schema=out_schema
+    return per_key_ordered_map(
+        df, keys, [ts_col], _hw, out_schema, n_partitions
     )
 
 
@@ -4904,10 +4764,9 @@ def isotonic_blocks(
     precision solver. Overflow contract: ``|block sum| * block count
     < 2^63`` (1e-4-unit daily sums: safe beyond 1e6-point series).
 
-    Scale shape: one shuffle on ``keys``, then the sorted-partition
+    Scale shape: the per-key ordered map (module docstring) with a
     stack kernel (O(n) amortized per series — each element is pushed
-    and merged at most once); the :func:`ewma`/:func:`lttb`
-    per-series contract. Rows-only (a while-merge recursion has no
+    and merged at most once). Rows-only (a while-merge recursion has no
     ANSI-SQL twin); pinned against sklearn-semantics brute force in
     tests/test_timeseries.py.
     """
@@ -4928,53 +4787,29 @@ def isotonic_blocks(
                     break
         return blocks
 
-    def _pava_partition(batches):
+    def _pava(kv, rows):
         import numpy as np
         import pandas as pd
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            parts[0]
-            if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
+        v = rows[value_col].to_numpy(np.int64)
+        blocks = _pava_one(v)
+        nxt_starts = [b[2] for b in blocks[1:]] + [len(v)]
+        return pd.DataFrame(
+            [
+                (*kv, bi, st, nx - 1, s, n)
+                for bi, ((s, n, st), nx) in enumerate(zip(blocks, nxt_starts))
+            ],
+            columns=[
+                *keys, "blk_idx", "start_idx", "end_idx", "blk_sum", "blk_n",
+            ],
         )
-        out = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            kv = kv if isinstance(kv, tuple) else (kv,)
-            v = g[value_col].to_numpy(np.int64)
-            blocks = _pava_one(v)
-            nxt_starts = [b[2] for b in blocks[1:]] + [len(v)]
-            for bi, ((s, n, st), nx) in enumerate(
-                zip(blocks, nxt_starts)
-            ):
-                out.append((*kv, bi, st, nx - 1, s, n))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    *keys, "blk_idx", "start_idx", "end_idx",
-                    "blk_sum", "blk_n",
-                ],
-            )
 
-    key_types = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name in keys
-    )
     out_schema = (
-        f"{key_types}, blk_idx bigint, start_idx bigint, "
+        f"{key_ddl(src, keys)}, blk_idx bigint, start_idx bigint, "
         "end_idx bigint, blk_sum bigint, blk_n bigint"
     )
-    part = (
-        src.repartition(n_partitions, *keys)
-        if n_partitions
-        else src.repartition(*keys)
-    )
-    return part.sortWithinPartitions(*keys, ts_col).mapInPandas(
-        _pava_partition, schema=out_schema
+    return per_key_ordered_map(
+        src, keys, [ts_col], _pava, out_schema, n_partitions
     )
 
 
@@ -5275,9 +5110,10 @@ def croston_smooth(
     per-period demand rate; NULL before the first demand). Negative
     values raise — Croston is defined for nonnegative demand.
 
-    Physical strategy is :func:`ewma`'s sorted-partition recurrence;
-    deterministic at any parallelism. Rows-only (order-recursive);
-    pinned against a pure-Python reference in pytest.
+    A recurrence per key on the per-key ordered map (module
+    docstring); deterministic at any parallelism. Rows-only
+    (order-recursive); pinned against a pure-Python reference in
+    pytest.
     """
     import numpy as np
 
@@ -5285,7 +5121,6 @@ def croston_smooth(
 
     if not (0 < alpha <= 1):
         raise ValueError(f"need 0<alpha<=1, got {alpha}")
-    keys = list(keys)
     out_schema = StructType(
         list(df.schema.fields)
         + [
@@ -5323,44 +5158,25 @@ def croston_smooth(
                 zs[t], ps[t] = z, p
         return zs, ps
 
-    def _croston_partition(batches):
+    def _croston(_, rows):
         import pandas as pd
 
-        parts = [p_ for p_ in batches if len(p_)]
-        if not parts:
-            return
-        pdf = (
-            parts[0]
-            if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
-        )
-        zs = np.full(len(pdf), np.nan)
-        ps = np.full(len(pdf), np.nan)
-        for _, idx in pdf.groupby(keys, sort=False).indices.items():
-            gz, gp = _croston_one(
-                pdf[value_col].to_numpy(np.float64)[idx]
-            )
-            zs[idx], ps[idx] = gz, gp
+        zs, ps = _croston_one(rows[value_col].to_numpy(np.float64))
         # nullable Float64 so pre-first-demand rows arrive as NULL,
         # not NaN (Spark distinguishes them)
         mask = np.isnan(zs)
+        out = {}
         for c, arr in (
             ("cr_size", zs),
             ("cr_interval", ps),
             ("cr_forecast", zs / ps),
         ):
-            col = pd.array(arr, dtype="Float64")
-            col[mask] = pd.NA
-            pdf[c] = col
-        yield pdf
+            out[c] = pd.array(arr, dtype="Float64")
+            out[c][mask] = pd.NA
+        return rows.assign(**out)
 
-    part = (
-        df.repartition(n_partitions, *keys)
-        if n_partitions
-        else df.repartition(*keys)
-    )
-    return part.sortWithinPartitions(*keys, ts_col).mapInPandas(
-        _croston_partition, schema=out_schema
+    return per_key_ordered_map(
+        df, keys, [ts_col], _croston, out_schema, n_partitions
     )
 
 
@@ -5471,8 +5287,8 @@ def pelt_changepoints(
     brute-force O(2^n) exhaustive-segmentation reference on short
     series plus an O(n²) unpruned DP on longer ones in pytest.
 
-    Scale shape: the :func:`ewma` sorted-partition contract — one key
-    shuffle, per-series kernel; PELT's pruning keeps the candidate
+    Scale shape: the per-key ordered map (module docstring), one
+    kernel call per series; PELT's pruning keeps the candidate
     set small under frequent changes (worst case O(n²) on
     change-free series, the documented PELT bound).
     """
@@ -5535,54 +5351,30 @@ def pelt_changepoints(
         bounds.reverse()
         return bounds, pre
 
-    def _pelt_partition(batches):
+    def _pelt(kv, rows):
         import numpy as np
         import pandas as pd
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            parts[0]
-            if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
+        v = rows[value_col].to_numpy(np.int64)
+        if len(v) < ms:
+            return None
+        bounds, pre = _pelt_one(v)
+        return pd.DataFrame(
+            [
+                (*kv, si, a, b - 1, pre[b] - pre[a], b - a)
+                for si, (a, b) in enumerate(bounds)
+            ],
+            columns=[
+                *keys, "seg_idx", "start_idx", "end_idx", "seg_sum", "seg_n",
+            ],
         )
-        out = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            kv = kv if isinstance(kv, tuple) else (kv,)
-            v = g[value_col].to_numpy(np.int64)
-            if len(v) < ms:
-                continue
-            bounds, pre = _pelt_one(v)
-            for si, (a, b) in enumerate(bounds):
-                out.append(
-                    (*kv, si, a, b - 1, pre[b] - pre[a], b - a)
-                )
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    *keys, "seg_idx", "start_idx", "end_idx",
-                    "seg_sum", "seg_n",
-                ],
-            )
 
-    key_types = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name in keys
-    )
     out_schema = (
-        f"{key_types}, seg_idx bigint, start_idx bigint, "
+        f"{key_ddl(src, keys)}, seg_idx bigint, start_idx bigint, "
         "end_idx bigint, seg_sum bigint, seg_n bigint"
     )
-    part = (
-        src.repartition(n_partitions, *keys)
-        if n_partitions
-        else src.repartition(*keys)
-    )
-    return part.sortWithinPartitions(*keys, ts_col).mapInPandas(
-        _pelt_partition, schema=out_schema
+    return per_key_ordered_map(
+        src, keys, [ts_col], _pelt, out_schema, n_partitions
     )
 
 
@@ -5611,8 +5403,8 @@ def whittaker_smooth(
     inputs. Series with fewer than 3 observed points pass through
     unsmoothed (the D₂ penalty needs 3).
 
-    Physical strategy: the :func:`ewma` sorted-partition kernel; the
-    solve is a dense SPD ``numpy.linalg.solve`` per series (exact
+    Runs on the per-key ordered map (module docstring); the solve is
+    a dense SPD ``numpy.linalg.solve`` per series (exact
     same input → same bits at any parallelism; series length is
     task-bounded by the per-key contract — the O(n) banded Thomas
     solve is the documented escape for very long series). Rows-only;
@@ -5625,7 +5417,6 @@ def whittaker_smooth(
 
     if lam < 0:
         raise ValueError(f"lambda must be >= 0, got {lam}")
-    keys = list(keys)
     out_schema = StructType(
         list(df.schema.fields) + [StructField("wh_smooth", DoubleType())]
     )
@@ -5650,35 +5441,17 @@ def whittaker_smooth(
         A = np.diag(w) + lam * (D.T @ D)
         return np.linalg.solve(A, w * np.nan_to_num(y))
 
-    def _wh_partition(batches):
+    def _wh(_, rows):
         import pandas as pd
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            parts[0]
-            if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
-        )
-        out = np.full(len(pdf), np.nan)
-        vals = pdf[value_col].to_numpy(np.float64)
-        for _, idx in pdf.groupby(keys, sort=False).indices.items():
-            y = vals[idx]
-            w = (~np.isnan(y)).astype(np.float64)
-            out[idx] = _wh_one(y, w)
+        y = rows[value_col].to_numpy(np.float64)
+        out = _wh_one(y, (~np.isnan(y)).astype(np.float64))
         col = pd.array(out, dtype="Float64")
         col[np.isnan(out)] = pd.NA
-        pdf["wh_smooth"] = col
-        yield pdf
+        return rows.assign(wh_smooth=col)
 
-    part = (
-        df.repartition(n_partitions, *keys)
-        if n_partitions
-        else df.repartition(*keys)
-    )
-    return part.sortWithinPartitions(*keys, ts_col).mapInPandas(
-        _wh_partition, schema=out_schema
+    return per_key_ordered_map(
+        df, keys, [ts_col], _wh, out_schema, n_partitions
     )
 
 

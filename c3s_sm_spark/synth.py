@@ -174,73 +174,3 @@ def gen_points_raw(
         .unionByName(dups)
         .drop("day_idx")
     )
-
-
-def daily_tier_fused(seq: DataFrame) -> DataFrame:
-    """Daily tier computed INSIDE the token arrays — the shuffle that
-    disappears (R1 flagship, scale variant).
-
-    :func:`sequences_to_points` + ``rollup(daily)`` shuffles every raw
-    point to its ``(doc_key, day)`` group — the honest cost when points
-    arrive time-major, like the reference's images
-    (``/root/reference/src/c3s_sm/reshuffle.py``: img2ts IS a
-    transpose). But the input_hint table is DOC-MAJOR: one row per
-    document carries the whole series, and daily windows never cross
-    documents — so the 24:1 day fan-in can be computed per row with
-    higher-order functions (JVM codegen, no Python) and the explode
-    emits ``ceil(n_tok/24)`` finished daily rows per doc: ZERO
-    shuffle, 24x fewer rows materialized. At 10^12 sequences that is
-    the difference between shuffling ~10^15 raw points and writing
-    ~4x10^13 daily rows straight from the scan.
-
-    Bit-parity contract: output is IDENTICAL to
-    ``rollup(sequences_to_points(seq), ["doc_key"], "ts", "daily")``
-    (pinned in tests/test_pipeline.py) — v_sum is a sum of <=24
-    small integers, exactly representable in float64 in any order;
-    nobs/flags are pure integers; v_mean divides the same two
-    numbers. The general :func:`~c3s_sm_spark.operators.rollup.rollup`
-    remains the path for arbitrary (time-major, multi-source) point
-    tables; this is the fused fast path for the sequence-table layout.
-    """
-    n_days = F.ceil(F.col("n_tok") / F.lit(24)).cast("int")
-    t0 = F.lit(T0).cast("date")
-
-    def _day(d):
-        # positions of day d: ints (posexplode emits int pos — xxhash64
-        # hashes int and long differently, so the type is load-bearing
-        # for flag parity)
-        p_lo = (d * 24).cast("int")
-        p_hi = F.least(F.col("n_tok").cast("int") - 1, d * 24 + 23).cast("int")
-        return F.struct(
-            d.alias("d"),
-            F.aggregate(
-                F.slice("tokens", d * 24 + 1, 24),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x.cast("long"),
-            ).alias("t_sum"),
-            F.least(F.lit(24), F.col("n_tok") - d * 24).cast("long").alias("nobs"),
-            F.exists(
-                F.sequence(p_lo, p_hi),
-                lambda p: F.pmod(_h(F.col("doc_id"), p, F.lit("f")), F.lit(3)) != 0,
-            ).alias("any768"),
-        )
-
-    days = F.transform(F.sequence(F.lit(0), n_days - 1), _day)
-    return (
-        seq.filter(F.size("tokens") >= 1)
-        .select(
-            F.substring("doc_id", 4, 18).cast("bigint").alias("doc_key"),
-            F.explode(days).alias("w"),
-        )
-        .select(
-            "doc_key",
-            F.to_timestamp(F.date_add(t0, F.col("w.d"))).alias("ts"),
-            (
-                F.col("w.t_sum").cast("double")
-                / F.col("w.nobs").cast("double")
-            ).alias("v_mean"),
-            F.col("w.t_sum").cast("double").alias("v_sum"),
-            F.col("w.nobs").alias("nobs"),
-            F.when(F.col("w.any768"), 768).otherwise(256).cast("int").alias("flags"),
-        )
-    )

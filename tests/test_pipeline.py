@@ -1104,43 +1104,6 @@ def test_pipeline_requires_utc_session(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def test_daily_tier_fused_bit_parity(spark):
-    """The fused in-array daily tier must equal the explode+rollup path
-    bit-for-bit — v_sum sums <=24 small integers (exact in float64 in
-    any order), everything else is pure integer arithmetic."""
-    from c3s_sm_spark.operators.rollup import rollup
-    from c3s_sm_spark.synth import (
-        daily_tier_fused,
-        gen_sequences,
-        sequences_to_points,
-    )
-
-    seq = gen_sequences(spark, 300)
-    ref = rollup(
-        sequences_to_points(seq), ["doc_key"], "ts", "daily",
-        value_col="v", flag_col="flag",
-    )
-    fused = daily_tier_fused(seq)
-    # same names+types; nullability may tighten (fused proves non-null)
-    assert [(f.name, f.dataType) for f in fused.schema] == [
-        (f.name, f.dataType) for f in ref.schema
-    ]
-    a = {
-        (r["doc_key"], str(r["ts"])): (r["v_mean"], r["v_sum"], r["nobs"], r["flags"])
-        for r in ref.collect()
-    }
-    b = {
-        (r["doc_key"], str(r["ts"])): (r["v_mean"], r["v_sum"], r["nobs"], r["flags"])
-        for r in fused.collect()
-    }
-    assert a == b and len(a) > 0
-    # zero-shuffle plan: no Exchange at all before the sink
-    txt = fused._sc._jvm.PythonSQLUtils.explainString(
-        fused._jdf.queryExecution(), "formatted"
-    ).split("== Initial Plan ==")[0]
-    assert "Exchange (" not in txt and "Join" not in txt
-
-
 def test_salted_join_equals_plain_join(spark):
     """X158: the salted join must produce EXACTLY the plain join's rows
     (inner and left), and spread a hot key over the salt domain."""

@@ -310,16 +310,31 @@ def test_validation_scores_zero_variance_gives_null_r(spark):
 def test_ewma_matches_pandas_and_partitioning(spark):
     """Recursive EWMA per key: bit-equal to pandas ewm(adjust=False) and
     invariant under input/output partitioning (each key's series is
-    complete + sorted inside one partition)."""
+    complete + sorted inside one partition). The other row-appending
+    recurrences on the per-key ordered map are held to the same
+    invariance, and the default width is pinned in the plan."""
+    import re
+
     import numpy as np
 
-    from c3s_sm_spark.operators.timeseries import ewma
+    from c3s_sm_spark.operators.timeseries import (
+        croston_smooth,
+        ewma,
+        swi_filter,
+        whittaker_smooth,
+    )
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
         "user_id", "ts", "value"
     )
+    default_width = ewma(ev, ["user_id"], "ts", "value", alpha=0.3)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        default_width._jdf.queryExecution(), "formatted"
+    )
+    n = 2 * spark.sparkContext.defaultParallelism
+    assert re.search(rf"hashpartitioning\(user_id#\d+L?, {n}\)", plan), plan
     p1 = (
-        ewma(ev, ["user_id"], "ts", "value", alpha=0.3)
+        default_width
         .toPandas()
         .sort_values(["user_id", "ts"])
         .reset_index(drop=True)
@@ -338,6 +353,17 @@ def test_ewma_matches_pandas_and_partitioning(spark):
         .to_numpy()
     )
     assert np.array_equal(p1["ewma"].to_numpy(), exp)
+
+    for op in (
+        lambda d, **kw: croston_smooth(d, ["user_id"], "ts", "value", **kw),
+        lambda d, **kw: swi_filter(d, ["user_id"], "ts", "value", 5.0, **kw),
+        lambda d, **kw: whittaker_smooth(d, ["user_id"], "ts", "value", **kw),
+    ):
+        a = op(ev).toPandas().sort_values(["user_id", "ts"])
+        b = op(ev.repartition(17), n_partitions=3).toPandas()
+        b = b.sort_values(["user_id", "ts"])
+        assert len(a) == len(p1)
+        assert a.reset_index(drop=True).equals(b.reset_index(drop=True))
 
 
 def test_lttb_golden_and_invariants(spark):
@@ -376,6 +402,25 @@ def test_lttb_golden_and_invariants(spark):
     b = out2.sort_values(["user_id", "ts"]).reset_index(drop=True)
     assert a.equals(b)
 
+    # the per-key ordered map's segment emitters: same output at any
+    # input/output partitioning
+    from c3s_sm_spark.operators.timeseries import (
+        binseg_changepoints,
+        isotonic_blocks,
+        matrix_profile_sad,
+    )
+
+    for op, order in (
+        (matrix_profile_sad, ["user_id", "idx"]),
+        (binseg_changepoints, ["user_id", "cp_rank"]),
+        (isotonic_blocks, ["user_id", "blk_idx"]),
+    ):
+        a = op(ev, ["user_id"], "ts", "value").toPandas()
+        b = op(ev.repartition(13), ["user_id"], "ts", "value", n_partitions=5)
+        b = b.toPandas().sort_values(order).reset_index(drop=True)
+        assert len(a) > 0
+        assert a.sort_values(order).reset_index(drop=True).equals(b)
+
 
 def test_lttb_passthrough_when_short(spark):
     from c3s_sm_spark.operators.timeseries import lttb
@@ -383,6 +428,39 @@ def test_lttb_passthrough_when_short(spark):
     rows = [("u", _ts("2024-01-01 00:00:00"), 1.0), ("u", _ts("2024-01-02 00:00:00"), 2.0)]
     df = spark.createDataFrame(rows, "user_id string, ts timestamp, value double")
     assert lttb(df, ["user_id"], "ts", "value", 10).count() == 2
+
+
+@pytest.mark.parametrize(
+    "op", ["holt_smooth", "ewma", "lttb", "mann_kendall_pieces"]
+)
+def test_null_key_rows_form_one_series(spark, op):
+    """Rows with a null key are one series, as in Spark's groupBy: each
+    operator's output for them equals its output for the same rows
+    under a non-null sentinel key (not dropped, not NULL, not garbage)."""
+    from c3s_sm_spark.operators import timeseries as tso
+
+    call = {
+        "holt_smooth": lambda d: tso.holt_smooth(d, ["k"], "ts", "value", 0.5, 0.3),
+        "ewma": lambda d: tso.ewma(d, ["k"], "ts", "value", alpha=0.3),
+        "lttb": lambda d: tso.lttb(d, ["k"], "ts", "value", n_out=3),
+        "mann_kendall_pieces": lambda d: tso.mann_kendall_pieces(d, ["k"], "ts", "value"),
+    }[op]
+    series = [
+        (_ts(f"2024-01-0{d} 00:00:00"), v)
+        for d, v in ((1, 3.0), (2, 1.0), (3, 4.0), (4, 1.0), (5, 5.0), (6, 9.0))
+    ]
+    other = [("a", t, 2 * v) for t, v in series]
+
+    def rows_for(key):
+        df = spark.createDataFrame(
+            other + [(key, t, v) for t, v in series],
+            "k string, ts timestamp, value double",
+        )
+        own = F.col("k").isNull() if key is None else F.col("k") == key
+        return sorted(tuple(r) for r in call(df).filter(own).drop("k").collect())
+
+    got = rows_for(None)
+    assert got and got == rows_for("s")
 
 
 def test_timeseries_ops_compose_with_tier_pipeline(spark, tmp_path):

@@ -54,7 +54,7 @@ spark = get_spark(app_name=f"scaling{{cores}}", master=f"local[{{cores}}]",
 run_pipeline(spark, {warm_sf}, warmup=False)
 best = None
 for _ in range({repeats}):
-    r = run_pipeline(spark, {sf}, warmup=False, fused={fused})
+    r = run_pipeline(spark, {sf}, warmup=False)
     if best is None or r["sec"] < best["sec"]:
         best = r
 best["cores"] = cores
@@ -83,10 +83,9 @@ print("RESULT " + json.dumps(best))
 """
 
 
-def run_at(cores: int, sf: float, repeats: int, fused: bool = False) -> dict:
+def run_at(cores: int, sf: float, repeats: int) -> dict:
     code = _CHILD.format(
         repo=REPO, cores=cores, sf=sf, warm_sf=sf / 10, repeats=repeats,
-        fused=fused,
     )
     out = subprocess.run(
         [sys.executable, "-c", code],
@@ -107,8 +106,6 @@ def main() -> None:
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--small", type=int, default=8)
     ap.add_argument("--large", type=int, default=32)
-    ap.add_argument("--fused", action="store_true",
-                    help="measure the zero-shuffle in-array daily path")
     ap.add_argument("--key", default=None,
                     help="merge result under this key in BENCH_SCALING.json "
                          "instead of overwriting the file")
@@ -117,17 +114,13 @@ def main() -> None:
     from bench import PIPELINE_DOCS_PER_SF
 
     sf = args.docs / PIPELINE_DOCS_PER_SF
-    small = run_at(args.small, sf, args.repeats, fused=args.fused)
-    large = run_at(args.large, sf, args.repeats, fused=args.fused)
+    small = run_at(args.small, sf, args.repeats)
+    large = run_at(args.large, sf, args.repeats)
     ratio = args.large / args.small
     eff = (large["points_per_sec"] / small["points_per_sec"]) / ratio
     cpu_eff = (small["cpu_probe_sec"] / large["cpu_probe_sec"]) / ratio
     out = {
-        "job": (
-            "flagship sequences->FUSED in-array daily->dekadal->monthly"
-            if args.fused
-            else "flagship sequences->raw->daily->dekadal->monthly cascade"
-        ),
+        "job": "flagship sequences->raw->daily->dekadal->monthly cascade",
         "input": {
             "n_docs": small["n_docs"],
             "n_raw_points": small["n_raw_points"],

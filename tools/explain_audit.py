@@ -650,7 +650,8 @@ def main() -> None:
         )
     )
 
-    # 31. Mann-Kendall (X127): one key shuffle into the Arrow kernel
+    # 31. Mann-Kendall (X127): one key shuffle into the per-key
+    # ordered map's partition-level Arrow kernel
     from c3s_sm_spark.operators.timeseries import mann_kendall_pieces
 
     mk_txt = plan_text(
@@ -664,11 +665,10 @@ def main() -> None:
     )
     sections.append(
         (
-            "mann_kendall (X127): one shuffle -> grouped Arrow kernel",
+            "mann_kendall (X127): one shuffle -> per-key ordered Arrow kernel",
             mk_txt,
             {
-                "grouped pandas kernel": "FlatMapGroupsInPandas" in mk_txt
-                or "FlatMapGroupsIn" in mk_txt,
+                "partition-level pandas kernel": "MapInPandas" in mk_txt,
                 "single shuffle": mk_txt.count("Exchange (") == 1,
                 "no join": "Join" not in mk_txt,
             },
