@@ -3,10 +3,11 @@
 
 Runs the headline queries from ``__spark_entry__.queries()`` against
 ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32), plus the flagship synthetic
-sequences -> raw -> daily -> dekadal -> monthly cascading-rollup pipeline
-at a document count proportional to the scale factor — that pipeline is
-the BASELINE.json metric ("rolled-up points/sec per executor").
+``local[$SPARK_GRAFT_CPUS]`` (default: the cores this process may run on),
+plus the flagship synthetic sequences -> raw -> daily -> dekadal ->
+monthly cascading-rollup pipeline at a document count proportional to the
+scale factor — that pipeline is the BASELINE.json metric ("rolled-up
+points/sec per executor").
 
 Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
@@ -28,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from c3s_sm_spark.session import get_spark  # noqa: E402
+from c3s_sm_spark.session import get_spark, host_cpus  # noqa: E402
 
 #: queries timed by default. ngram_jaccard / minhash_lsh are quadratic-ish
 #: in candidate pairs at sf0.1's 5k docs but still sub-minute; keep them —
@@ -278,7 +279,7 @@ def run_pipeline(spark, sf: float, warmup: bool = True) -> dict:
     from c3s_sm_spark.synth import gen_sequences, sequences_to_points
 
     n_docs = max(2000, int(PIPELINE_DOCS_PER_SF * sf))
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = host_cpus()
     # input partition count: cores*16 — a {32..512}-partition grid at 8
     # and 32 cores found 16x fastest at BOTH sizes (smaller tasks balance
     # the tail; ~15% over 4x). Overridable so layout experiments and the
@@ -445,7 +446,7 @@ def run_packed_read(spark) -> dict:
 _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-from c3s_sm_spark.session import get_spark
+from c3s_sm_spark.session import get_spark, host_cpus
 from bench import run_pipeline
 extra = {{}}
 if os.path.isdir("/dev/shm"):
@@ -460,7 +461,7 @@ for _ in range(3):  # pass 1 doubles as the JIT warm-up; report steady state
 # same-JVM contention probe (see main()): the flagship number is only
 # comparable across rounds relative to this
 from pyspark.sql import functions as F
-cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+cores = host_cpus()
 probe = (spark.range(0, 2_000_000_000, 1, cores * 16)
          .select((F.xxhash64("id") % 1_000_000).alias("h")).agg(F.sum("h")))
 probe.head()
@@ -534,7 +535,7 @@ def main() -> None:
     # divide out when comparing BENCH_r{N}.json files across rounds.
     from pyspark.sql import functions as F
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = host_cpus()
     probe = (
         spark.range(0, 2_000_000_000, 1, cores * 16)
         .select((F.xxhash64("id") % 1_000_000).alias("h"))

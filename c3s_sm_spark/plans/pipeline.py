@@ -42,8 +42,9 @@ Design (Spark-first, scale-first):
   ``refresh`` or ``maintain`` from metadata alone. The retention horizon
   is a table property (``retention_through``), which survives snapshot
   expiry;
-- point reads serve one key's series with no Spark job: the driver
-  picks the key's files from the HEAD manifests (packed ``bucket=<b>``
+- point reads serve one key's series with no Spark job and no query:
+  the driver hashes the key with Spark's own XXH64 through Py4J, picks
+  the key's files from the HEAD manifests (packed ``bucket=<b>``
   blobs, the tail's masked months, or the tier files whose recorded
   ``kb`` values hold the key's bucket), reads them with pyarrow —
   row groups pruned by the ``kb`` and key statistics — decodes the blobs
@@ -54,6 +55,7 @@ Design (Spark-first, scale-first):
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import os
 import time
 import uuid
@@ -61,6 +63,9 @@ import uuid
 import numpy as np
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType, IntegerType, LongType, ShortType, StringType,
+)
 
 from c3s_sm_spark.functions.codecs import pack_series, unpack_series
 from c3s_sm_spark.operators.dedup import keep_latest
@@ -87,6 +92,12 @@ _LINEAGE_COLS = (
 #: driver+JVM CPU against 1.79 s on Spark at 56 MB, 1.76 s against
 #: 1.50 s at 78 MB
 _LOCAL_READ_MAX_BYTES = 64 << 20
+#: the seed ``F.xxhash64`` hashes with
+_XXH64_SEED = 42
+#: integer key types the driver-side bucket hashes, by width
+_INT_BITS = {
+    LongType(): 64, IntegerType(): 32, ShortType(): 16, ByteType(): 8,
+}
 _METRICS_COLS = (
     "run_id string, tier string, pmonth string, n_rows bigint, n_points bigint, "
     "ts_min timestamp, ts_max timestamp, written_at double"
@@ -408,8 +419,11 @@ class TierPipeline:
 
     def _kb(self, col: str | Column | None = None) -> Column:
         """Key bucket: ``pmod(xxhash64(key), n_buckets)``.
-        One definition shared by the tier writer, pack_tier, and the
-        packed table's ``bucket`` column so bucket sets compose."""
+        One definition shared by the tier writer, pack_tier, the packed
+        table's ``bucket`` column and the Spark point-read plan, so
+        bucket sets compose. The driver point read computes the same
+        value with no query: :meth:`_key_bucket` calls Spark's XXH64
+        through Py4J, pinned to this expression by a test."""
         target = self.key if col is None else col
         return F.pmod(F.xxhash64(target), F.lit(self.n_buckets)).cast("int")
 
@@ -662,19 +676,40 @@ class TierPipeline:
         # kb is physical layout (the key-hash clustering column), not schema
         return self.tiers[tier].read(self.spark).drop("kb")
 
-    def _key_bucket(self, key_value, key_type) -> tuple:
-        """``(bucket, key)``: the key's bucket and the key cast to the
-        stored dtype ``key_type``, from :meth:`_kb` on a one-row local
-        relation — Catalyst folds it on the driver, so no Spark job runs.
-        Cast BEFORE hashing: xxhash64 hashes int and long differently, so
-        an int32-sized Python literal against a LongType column would
-        name the wrong bucket and silently return zero rows."""
-        import pandas as pd
+    @functools.cached_property
+    def _xxh64(self) -> tuple:
+        """Py4J handles to Spark's own XXH64, resolved once: a hasher
+        seeded like ``F.xxhash64`` (its ``hashInt``/``hashLong``), the
+        ``XXH64`` class (static ``hashUTF8String``) and ``UTF8String``."""
+        jvm = self.spark._jvm
+        xxh64 = jvm.org.apache.spark.sql.catalyst.expressions.XXH64
+        utf8 = jvm.org.apache.spark.unsafe.types.UTF8String
+        return xxh64(_XXH64_SEED), xxh64, utf8
 
-        k = F.col("k").cast(key_type)
-        lit = self.spark.createDataFrame(pd.DataFrame({"k": [key_value]}))
-        bucket, key = lit.select(self._kb(k), k).collect()[0]
-        return bucket, key
+    def _key_bucket(self, key_value, key_type) -> tuple:
+        """``(bucket, key)``: :meth:`_kb` of ``key_value`` at the stored
+        key type ``key_type``, hashed on the driver by Spark's own XXH64
+        through Py4J (no DataFrame, no query), then ``%`` — ``pmod`` for
+        a positive modulus. Exact matches only: a ``str`` key on a
+        default-collation string column, or an in-range ``int`` on a
+        bigint/int/short/byte column, hashed at the stored width
+        (xxhash64 hashes int and long differently, so an int32-sized key
+        against a LongType column must hash as a long). Anything else is
+        ``(None, None)``, and the caller takes the Spark path, which
+        casts and hashes the key inside the plan."""
+        hasher, xxh64, utf8 = self._xxh64
+        bits = _INT_BITS.get(key_type)
+        if type(key_value) is str and key_type == StringType():
+            h = xxh64.hashUTF8String(utf8.fromString(key_value), _XXH64_SEED)
+        elif (
+            bits is not None and type(key_value) is int
+            and -(1 << bits - 1) <= key_value < 1 << bits - 1
+        ):
+            # short and byte columns hash as int, like Spark's xxhash64
+            h = (hasher.hashLong if bits == 64 else hasher.hashInt)(key_value)
+        else:
+            return None, None
+        return h % self.n_buckets, key_value
 
     def _point_read_local(
         self,
@@ -690,7 +725,7 @@ class TierPipeline:
         tail rows of other months (a crash between a fold's packed commit
         and its tail truncate) stay invisible. None — the caller falls
         back to Spark — when a subtree has no recorded schema, the key
-        does not cast to the stored type, or a scan's files exceed
+        does not match the stored type, or a scan's files exceed
         ``_LOCAL_READ_MAX_BYTES``."""
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -831,9 +866,13 @@ class TierPipeline:
         serves it: the files whose recorded ``kb`` values hold the key's
         bucket, row groups pruned by the ``kb`` and key statistics.
 
-        A normal-sized read runs NO Spark job: the driver reads the
-        manifest-pruned files with pyarrow, decodes with the numpy
+        A normal-sized read runs NO Spark job and no query: the driver
+        hashes the key with Spark's XXH64 (:meth:`_key_bucket`), reads
+        the manifest-pruned files with pyarrow, decodes with the numpy
         codecs and returns a local relation (:meth:`_point_read_local`).
+        A key whose Python type does not match the stored key type (an
+        ``int`` on a string column, a ``str`` on a bigint one) takes the
+        Spark path, which casts it in the plan.
         When one scan's files exceed ``_LOCAL_READ_MAX_BYTES``, or a
         subtree has no recorded schema, the read degrades to the Spark
         scan with the distributed ``unpack_series`` decode; pass

@@ -76,6 +76,35 @@ def ship_package(spark: SparkSession) -> None:
     spark._c3s_pkg_shipped = True
 
 
+def host_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` when set, else the cores this process may run
+    on: its CPU affinity, which a cpuset-pinned container reports where
+    ``os.cpu_count()`` gives the whole machine."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _driver_memory() -> str:
+    """``$SPARK_DRIVER_MEM`` when set, else half the host's available
+    memory (``MemAvailable``) in whole GiB, at least 1g: a local session
+    is one JVM holding the driver and every executor thread, and a heap
+    sized past the host's memory lets a large job take the host down
+    instead of failing."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            line = next(ln for ln in f if ln.startswith("MemAvailable:"))
+    except OSError:  # no /proc off Linux
+        return "4g"
+    return f"{max(1, int(line.split()[1]) >> 21)}g"
+
+
 def get_spark(
     app_name: str = "c3s_sm_spark",
     master: str | None = None,
@@ -84,15 +113,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the canonical SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[<host_cpus()>]`` and the driver heap
+    to half the available memory (:func:`_driver_memory`);
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` override them.
     All configs here are scale-safe: AQE handles runtime partition
     coalescing and skew-join splitting on a real cluster; Arrow makes the
     pandas-UDF codec path batch-vectorized.
     """
     _export_pythonpath()
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{host_cpus()}]"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -107,7 +137,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -5,11 +5,16 @@ job, and it returns what the Spark scan path returns."""
 from __future__ import annotations
 
 import math
+import random
 import shutil
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType, IntegerType, LongType, ShortType, StringType, StructField,
+    StructType,
+)
 
 from c3s_sm_spark.plans import pipeline
 from c3s_sm_spark.plans.pipeline import TierPipeline
@@ -146,6 +151,82 @@ def test_bigint_key_hashes_at_stored_type(spark, raw_points, tmp_path):
             "struct<doc_id:bigint,ts:timestamp,v_mean:double>"
         )
         p.pack_tier("daily")
+
+
+def _random_keys(kind):
+    rng = random.Random(7)
+    if kind == "string":
+        chars = "az09_-ÿ€日本🙂"
+        return ["".join(rng.choice(chars) for _ in range(rng.randrange(1, 40)))
+                for _ in range(40)]
+    return [rng.randrange(-(1 << 63), 1 << 63) for _ in range(40)]
+
+
+_EDGES = {
+    "string": (StringType(), ["", "a", "é", "日本語", "🙂", "x" * 100,
+                              "ÿ€日🙂" * 40, "doc0000000004"]
+               + _random_keys("string")),
+    "bigint": (LongType(), [-(1 << 63), -(1 << 63) + 1, (1 << 63) - 1,
+                            (1 << 63) - 2, 1 << 31, (1 << 31) - 1, -(1 << 31),
+                            -(1 << 31) - 1, 1 << 32, 0, 1, -1, 5]
+               + _random_keys("bigint")),
+    "int": (IntegerType(), [-(1 << 31), -(1 << 31) + 1, (1 << 31) - 1, 0, 1,
+                            -1, 5, 1 << 16, -(1 << 16)]),
+    "short": (ShortType(), [-(1 << 15), (1 << 15) - 1, 0, 1, -1, 255, -256]),
+    "byte": (ByteType(), [-128, -127, 127, 126, 0, 1, -1]),
+}
+
+
+@pytest.mark.parametrize("kind", list(_EDGES))
+def test_driver_key_bucket_equals_kb(spark, tmp_path, monkeypatch, kind):
+    """The driver-side bucket (Spark's XXH64 through Py4J) equals
+    ``_kb`` evaluated by Spark over the same values, and computing it
+    builds no DataFrame and runs no job."""
+    key_type, values = _EDGES[kind]
+    p = TierPipeline(spark, str(tmp_path / "kb"), n_buckets=13)
+    df = spark.createDataFrame(
+        [(v,) for v in values], StructType([StructField("k", key_type)])
+    )
+    exp = [r[0] for r in df.select(p._kb(F.col("k"))).collect()]
+
+    def no_dataframe(*a, **kw):
+        raise AssertionError("_key_bucket built a DataFrame")
+
+    monkeypatch.setattr(spark, "createDataFrame", no_dataframe)
+    got, jobs = _jobs_during(
+        spark, lambda: [p._key_bucket(v, key_type) for v in values]
+    )
+    assert jobs == []
+    assert [b for b, _ in got] == exp
+    assert [k for _, k in got] == values
+
+
+def test_mismatched_key_type_takes_spark_path(spark, bases, raw_points,
+                                              tmp_path):
+    """A key whose Python type does not match the stored key type has no
+    driver-side bucket; the read takes the Spark path and returns what
+    ``local_decode=False`` returns."""
+    p = TierPipeline(spark, bases["packed"])
+    for key, key_type in ((4, StringType()), ("5", LongType()),
+                          (True, LongType()), (1 << 63, LongType()),
+                          (128, ByteType()), (4.0, IntegerType())):
+        assert p._key_bucket(key, key_type) == (None, None), (key, key_type)
+    got, jobs = _jobs_during(spark, lambda: p.point_read(4, "daily").collect())
+    assert jobs
+    assert _series(got) == _series(
+        p.point_read(4, "daily", local_decode=False).collect()
+    )
+    raw_long = raw_points.withColumn(
+        "doc_id", F.substring("doc_id", 4, 10).cast("long")
+    )
+    p = TierPipeline(spark, str(tmp_path / "tp"))
+    p.ingest(raw_long)
+    p.refresh(["daily"])
+    got, jobs = _jobs_during(spark, lambda: p.point_read("5", "daily").collect())
+    assert jobs and len(got) > 0
+    assert _series(got) == _series(
+        p.point_read("5", "daily", local_decode=False).collect()
+    ) == _series(p.point_read(5, "daily").collect())
 
 
 def test_over_cap_read_degrades_to_spark(spark, bases, monkeypatch):

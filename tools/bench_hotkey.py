@@ -40,6 +40,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from c3s_sm_spark.session import host_cpus  # noqa: E402
+
 _CELL = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
@@ -151,7 +153,7 @@ def main() -> None:
         "hot_rows": args.hot,
         "cold_keys": args.cold_keys,
         "cold_rows": args.cold_rows,
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": host_cpus(),
     }
     for op in ("sessionize", "asof_join"):
         plain = run_cell(op, "plain", args)

@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -25,6 +27,32 @@ from c3s_sm_spark.operators.rollup import cascade, rollup  # noqa: E402
 from c3s_sm_spark.session import get_spark  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+
+#: run-dependent tokens with no meaning across runs -> fixed placeholders
+_PLACEHOLDERS = (
+    (r"RDD\[\d+\]", "RDD[<id>]"),
+    (re.escape(tempfile.gettempdir()) + r"/audit_tiers_\w+", "<tmp>/audit_tiers"),
+    # snapshot subtrees: s<13-digit epoch ms><6 hex> (tableio)
+    (r"/s\d{13}[0-9a-f]{6}/", "/s<snapshot>/"),
+    (r"[0-9a-f]{8}-(?:[0-9a-f]{4}-){3}[0-9a-f]{12}", "<uuid>"),
+)
+
+
+def normalize(txt: str) -> str:
+    """A plan's text with its session-dependent tokens fixed, so that a
+    rerun rewrites only the plans that changed: expression ids and
+    ``plan_id``s renumbered in order of first use (links inside the plan
+    survive), RDD ids, temp paths, snapshot subtrees and part-file UUIDs
+    replaced by placeholders."""
+    for pattern in (r"(?<=#)\d+", r"(?<=plan_id=)\d+"):
+        ids: dict[str, str] = {}
+        txt = re.sub(
+            pattern, lambda m: ids.setdefault(m.group(), str(len(ids) + 1)), txt
+        )
+    for pattern, placeholder in _PLACEHOLDERS:
+        txt = re.sub(pattern, placeholder, txt)
+    return txt
 
 
 def plan_text(df) -> str:
@@ -198,9 +226,7 @@ def main() -> None:
     # This is what the point-read FALLBACK (kb == hash(key)) and any
     # caller-side bucket-restricted read prune on; the default point
     # read picks files by their recorded kb values on the driver
-    import re
     import shutil
-    import tempfile
 
     from c3s_sm_spark.plans.pipeline import TierPipeline
     from c3s_sm_spark.synth import gen_points_raw
@@ -1020,7 +1046,7 @@ def main() -> None:
         for label, ok in checks.items():
             ok_all &= bool(ok)
             out.append(f"- [{'x' if ok else ' '}] {label}\n")
-        out.append("\n```\n" + txt.strip() + "\n```\n")
+        out.append("\n```\n" + normalize(txt.strip()) + "\n```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.writelines(out)
     print("PLANS.md written;", "ALL CHECKS PASS" if ok_all else "SOME CHECKS FAILED")
