@@ -98,6 +98,8 @@ _XXH64_SEED = 42
 _INT_BITS = {
     LongType(): 64, IntegerType(): 32, ShortType(): 16, ByteType(): 8,
 }
+#: salts per month in the raw ingest repartition
+_N_SALTS = 8
 _METRICS_COLS = (
     "run_id string, tier string, pmonth string, n_rows bigint, n_points bigint, "
     "ts_min timestamp, ts_max timestamp, written_at double"
@@ -105,11 +107,10 @@ _METRICS_COLS = (
 _EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
 
 
-def _pmonths(files: list[str]) -> set[str]:
-    """``pmonth`` partition values named by data file paths (no scan)."""
-    return {SnapshotTable._partition_of(f, ["pmonth"])[0] for f in files} - {
-        None
-    }
+def _pmonths(tbl: SnapshotTable, files=None) -> set[str]:
+    """``pmonth`` values of a month-partitioned table's ``files`` (default:
+    HEAD's), named by their paths (no scan)."""
+    return {m for (m,) in tbl.partitions(files)}
 
 
 def _month_aggs(months: list[str]) -> list[Column]:
@@ -158,7 +159,6 @@ class TierPipeline:
         base_dir: str,
         key: str = "doc_id",
         n_buckets: int = 32,
-        n_salts: int = 8,
     ):
         # pmonth (the partition/recompute unit) is derived with
         # date_format(ts), which renders in the SESSION timezone: a
@@ -178,7 +178,6 @@ class TierPipeline:
         self.base = base_dir
         self.key = key
         self.n_buckets = n_buckets
-        self.n_salts = n_salts
         self.raw = SnapshotTable(os.path.join(base_dir, "raw"), ["pmonth"])
         # tiers are partitioned by the month alone, the refresh overwrite
         # unit; kb is a data column the files are clustered on (see
@@ -285,7 +284,7 @@ class TierPipeline:
             ),
         ).otherwise(F.date_format("ts", "yyyy-MM"))
         df = points.withColumn("pmonth", pmonth)
-        salt = F.pmod(F.xxhash64(self.key, F.lit(17)), F.lit(self.n_salts))
+        salt = F.pmod(F.xxhash64(self.key, F.lit(17)), F.lit(_N_SALTS))
         df = df.repartition(F.col("pmonth"), salt)
         return self.raw.append(df, {"op": "ingest", **(summary or {})})
 
@@ -451,7 +450,9 @@ class TierPipeline:
             # ts, and every tier window nests inside its month, so the
             # months named by the delta files are exactly the partitions
             # to recompute
-            months = sorted(_pmonths(src_tbl.incremental_files(hwm, src_head)))
+            months = sorted(
+                _pmonths(src_tbl, src_tbl.incremental_files(hwm, src_head))
+            )
             src_name = "raw" if TIERS[tier] is None else TIERS[tier]
             horizon = self._retention_through(src_name)
             if horizon is not None:
@@ -581,19 +582,15 @@ class TierPipeline:
         if prev_src is not None and prev_src in chain_ids and not fold:
             if prev_src == head:
                 return ptbl.head()  # already current
-            months = _pmonths(tbl.incremental_files(prev_src, head))
+            months = _pmonths(tbl, tbl.incremental_files(prev_src, head))
             # months named only by removed files (keys superseded by an
-            # overwrite, no replacement row): read the pmonth path
-            # segment of each file an overwrite dropped vs its parent
+            # overwrite, no replacement row): the pmonth of each file an
+            # overwrite dropped vs its parent
             for i in range(chain_ids.index(prev_src) + 1, len(snaps)):
                 m = snaps[i]
-                if m["operation"] == "compact":
-                    continue
-                parent = set(snaps[i - 1]["files"]) if i > 0 else set()
-                for f in parent - set(m["files"]):
-                    pm = tbl._partition_of(f, ["pmonth"])[0]
-                    if pm is not None:
-                        months.add(pm)
+                if m["operation"] != "compact":
+                    parent = set(snaps[i - 1]["files"]) if i > 0 else set()
+                    months |= _pmonths(tbl, parent - set(m["files"]))
             if not months:
                 # rewrite-only window (compact): data unchanged — record
                 # the new source snapshot without touching any file; the
@@ -658,13 +655,13 @@ class TierPipeline:
             .withColumn("bucket", bucket_of)
             .repartition("bucket")
         )
-        # replace_grain=0: a FULL repack supersedes every existing packed
+        # the empty prefix: a FULL repack supersedes every existing packed
         # partition, including buckets the new pack writes no rows for.
         # No masked_months in the summary: the fresh pack IS the tier.
         snap = ptbl.overwrite_partitions(
             packed,
             {"tier": tier, "src_snapshot": head, "mode": "full"},
-            replace_grain=0,
+            replace_values=[()],
         )
         # after the packed commit (crash ordering: see _truncate_tail)
         self._truncate_tail(tier, {"folded_into": snap})
@@ -976,11 +973,8 @@ class TierPipeline:
         run_id = uuid.uuid4().hex[:12]
         tables = {"raw": self.raw, **self.tiers}
 
-        def _months(tbl: SnapshotTable) -> set[str]:
-            return _pmonths(tbl._files())
-
         if as_of is None:
-            raw_months = _months(self.raw)
+            raw_months = _pmonths(self.raw)
             if not raw_months:
                 return {}
             as_of = max(raw_months)
@@ -991,10 +985,10 @@ class TierPipeline:
             # keep exactly `keep` trailing months: as_of back to horizon incl.
             m_total = (year * 12 + month - 1) - (int(keep) - 1)
             horizon = f"{m_total // 12:04d}-{m_total % 12 + 1:02d}"
-            old = sorted(m for m in _months(tbl) if m < horizon)
+            old = sorted(m for m in _pmonths(tbl) if m < horizon)
             cov = self._COARSER[tier]
             if cov is not None:
-                covered = _months(self.tiers[cov])
+                covered = _pmonths(self.tiers[cov])
                 old = [m for m in old if m in covered]
             if not old:
                 report[tier] = {"dropped_months": 0}

@@ -4,16 +4,23 @@ SURVEY.md §7 plans Iceberg for the tier tables; this sandbox has no Iceberg
 runtime jar and no network, so this module provides the same *semantics*
 behind a thin interface that an Iceberg catalog can replace verbatim:
 
-- **atomic commits**: every write produces an immutable snapshot manifest
-  (JSON list of data files); the table HEAD advances by an atomic
-  ``os.replace`` — readers never see a half-written table. The reference's
+- **one commit path**: a mutator writes its data files, then ``_commit``
+  writes an immutable snapshot manifest (JSON list of data files), then
+  the table HEAD. Every metadata file is written by ``_replace`` (a uuid
+  temp name, then an atomic ``os.replace``): readers never see a
+  half-written table, and a crash between two steps leaves only
+  unreferenced files, so re-running the job converges. The reference's
   analog is the all-or-nothing netCDF cell-file append plus the
   ``000_overview.yml`` lineage record written after success
   (``/root/reference/src/c3s_sm/misc.py:163-250``).
-- **append / dynamic partition overwrite**: ``append(df)`` adds files;
-  ``overwrite_partitions(df)`` replaces exactly the partitions present in
-  ``df`` (Iceberg ``overwritePartitions``), which makes window recompute
-  idempotent — the engine's crash-resume story.
+- **append / partition replace**: ``append(df)`` adds files; every other
+  commit keeps the base files minus those under a set of partition-value
+  prefixes (``_kept``: ``("a",)`` is all of ``p='a'`` on a ``(p, q)``
+  table, ``()`` every partition; an unpartitioned table is the one
+  partition ``()``). ``overwrite_partitions(df)`` replaces the partitions
+  present in ``df`` (Iceberg ``overwritePartitions``) plus its
+  ``replace_values``, which makes window recompute idempotent — the
+  engine's crash-resume story.
 - **snapshot reads & incremental scans**: ``read(spark, snapshot_id=...)``
   time-travels; ``read_incremental(spark, since, until)`` reads only files
   added in ``(since, until]`` — the Iceberg ``start-snapshot-id`` pattern
@@ -64,8 +71,9 @@ Scale notes: manifests list files, not rows, so commit cost is O(files);
 partition values are encoded in directory names (hive-style via
 ``partitionBy``) so partition pruning works through Spark's file index, and
 ``basePath`` keeps partition columns when reading an explicit file subset.
-On a real deployment swap this class for Iceberg — the pipeline only calls
-the methods above.
+Only this module parses those paths: callers get a file set's partition
+values from :meth:`SnapshotTable.partitions`. On a real deployment swap
+this class for Iceberg — the pipeline only calls the methods above.
 """
 
 from __future__ import annotations
@@ -152,10 +160,8 @@ class SnapshotTable:
         self.man_dir = os.path.join(root, "_manifests")
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.man_dir, exist_ok=True)
-        props_path = os.path.join(self.man_dir, "table.json")
-        if os.path.exists(props_path):
-            with open(props_path) as f:
-                self.props = json.load(f)
+        if os.path.exists(os.path.join(self.man_dir, "table.json")):
+            self.properties()
             if partition_by is not None and partition_by != self.props["partition_by"]:
                 raise ValueError(
                     f"table at {root} is partitioned by "
@@ -163,10 +169,7 @@ class SnapshotTable:
                 )
         else:
             self.props = {"partition_by": partition_by or []}
-            tmp = props_path + f".tmp{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(self.props, f)
-            os.replace(tmp, props_path)
+            self._replace("table.json", json.dumps(self.props))
 
     # ------------------------------------------------------------- snapshots
 
@@ -175,13 +178,6 @@ class SnapshotTable:
         return self.props["partition_by"]
 
     # ------------------------------------------------------- table properties
-
-    def _write_props(self) -> None:
-        path = os.path.join(self.man_dir, "table.json")
-        tmp = path + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(self.props, f)
-        os.replace(tmp, path)
 
     def set_properties(self, properties: dict[str, str]) -> None:
         """Merge string table properties (Iceberg ``ALTER TABLE ... SET
@@ -193,7 +189,7 @@ class SnapshotTable:
         merged = self.properties()
         merged.update({str(k): str(v) for k, v in properties.items()})
         self.props["properties"] = merged
-        self._write_props()
+        self._replace("table.json", json.dumps(self.props))
 
     def properties(self) -> dict[str, str]:
         """Current table properties (empty dict when never set), re-read
@@ -228,6 +224,15 @@ class SnapshotTable:
     def _files(self, snapshot_id: str | None = None) -> list[str]:
         sid = snapshot_id or self.head()
         return self._manifest(sid)["files"] if sid else []
+
+    def _replace(self, name: str, text: str) -> None:
+        """Atomically (re)write the metadata file ``name``: a uuid temp
+        name, then ``os.replace``. The one metadata write of the table."""
+        path = os.path.join(self.man_dir, name)
+        tmp = f"{path}.tmp{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
 
     def _lock(self):
         """Acquire the table's commit lock (O_CREAT|O_EXCL lockfile).
@@ -285,15 +290,8 @@ class SnapshotTable:
                 "files": sorted(files),
                 "summary": summary,
             }
-            man_path = os.path.join(self.man_dir, f"snap-{sid}.json")
-            tmp = man_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, man_path)
-            head_tmp = os.path.join(self.man_dir, f"HEAD.tmp{uuid.uuid4().hex}")
-            with open(head_tmp, "w") as f:
-                f.write(sid)
-            os.replace(head_tmp, os.path.join(self.man_dir, "HEAD"))
+            self._replace(f"snap-{sid}.json", json.dumps(manifest))
+            self._replace("HEAD", sid)
             return sid
         finally:
             try:
@@ -368,16 +366,43 @@ class SnapshotTable:
         )
         return tuple(vals.get(k) for k in partition_by)
 
+    def partitions(self, files: Collection[str] | None = None) -> set[tuple]:
+        """Partition values (string tuples in ``partition_by`` order) of
+        ``files`` — HEAD's files by default — read off their paths, with
+        no scan; ``()`` for a file of an unpartitioned table."""
+        files = self._files() if files is None else files
+        return {self._partition_of(f, self.partition_by) for f in files}
+
+    @staticmethod
+    def _prefixes(values: Collection[tuple]) -> set[tuple]:
+        """Partition-value prefixes as string tuples, without those a
+        shorter prefix in the set already covers."""
+        pre = {tuple(str(x) for x in v) for v in values}
+        return {v for v in pre if not any(v[:n] in pre for n in range(len(v)))}
+
+    def _kept(self, files: list[str], prefixes: set[tuple]) -> list[str]:
+        """``files`` minus those under any of ``prefixes`` (:meth:`_prefixes`;
+        a prefix matches every sub-partition under it, ``()`` every file)
+        — the one rule by which a commit drops base files."""
+        lens = {len(v) for v in prefixes}
+        return [
+            f for f in files
+            if not any(
+                self._partition_of(f, self.partition_by)[:n] in prefixes
+                for n in lens
+            )
+        ]
+
     def overwrite_partitions(
         self,
         df: DataFrame | None,
         summary: dict | Callable[[], dict] | None = None,
-        replace_grain: int | None = None,
         replace_values: list[tuple] | None = None,
     ) -> str:
         """Replace exactly the partitions present in ``df`` (dynamic
         partition overwrite). Idempotent: re-running the same write yields
-        the same table state — the engine's resume primitive.
+        the same table state — the engine's resume primitive. An
+        unpartitioned table is one partition: it is replaced whole.
 
         ``df=None`` writes no data: only ``replace_values`` are dropped,
         and the commit records ``summary`` (a metadata-only commit). A
@@ -385,49 +410,28 @@ class SnapshotTable:
         the commit, so it may carry figures observed on the write itself
         (``DataFrame.observe``).
 
-        ``replace_grain`` replaces at a COARSER unit: the first
-        ``replace_grain`` partition columns define the replace set, and
-        every existing file under a touched coarse partition is dropped
-        even when the new data has no rows for its sub-partition. A table
-        partitioned ``(region, day)`` whose recompute unit is the region
-        needs ``replace_grain=1`` — plain dynamic overwrite would leave a
-        stale ``(region, day)`` file behind whenever a recomputed region
-        no longer has rows for that day (Iceberg's static ``REPLACE
-        WHERE`` on the region predicate vs dynamic mode);
-        ``replace_grain=0`` replaces every partition (a full rebuild).
-
-        ``replace_values`` adds an EXPLICIT static replace set (partition
-        value tuples, prefix-matched like :meth:`delete_partitions`):
-        those partitions are dropped even when ``df`` writes no rows
-        into them — the "this partition is now empty" half of a static
-        overwrite that dynamic mode cannot express.
+        ``replace_values`` adds a STATIC replace set of partition-value
+        prefixes (:meth:`_kept`): those partitions are dropped even when
+        ``df`` writes no rows into them — the "this partition is now
+        empty" half of a static overwrite (Iceberg's ``REPLACE WHERE``)
+        that dynamic mode cannot express. ``[("a",)]`` on a ``(p, q)``
+        table replaces every ``p='a'`` partition; ``[()]`` replaces every
+        partition (a full rebuild).
         """
         base = self.head()
         _sub, new_files = self._write_files(df)
         summary = _resolve(summary)
-        if not self.partition_by:
-            return self._commit(
-                new_files, "overwrite", summary, expected_parent=base
+        op, replaced = "overwrite", {()}
+        if self.partition_by:
+            op = "overwrite_partitions"
+            replaced = self._prefixes(
+                [*self.partitions(new_files), *(replace_values or [])]
             )
-        g = len(self.partition_by) if replace_grain is None else replace_grain
-        replaced = {
-            self._partition_of(f, self.partition_by)[:g] for f in new_files
-        }
-        if replace_values is not None:
-            replaced |= {tuple(str(x) for x in v) for v in replace_values}
-        lens = {len(v) for v in replaced}
-        kept = [
-            f
-            for f in self._files(base)
-            if not any(
-                self._partition_of(f, self.partition_by)[:n] in replaced
-                for n in lens
-            )
-        ]
+            summary["replaced_partitions"] = len(replaced)
         return self._commit(
-            kept + new_files,
-            "overwrite_partitions",
-            {**summary, "replaced_partitions": len(replaced)},
+            self._kept(self._files(base), replaced) + new_files,
+            op,
+            summary,
             expected_parent=base,
         )
 
@@ -658,19 +662,7 @@ class SnapshotTable:
                 # delete/overwrite removal: rows in the affected
                 # partitions are gone/superseded — drop them from the
                 # delta BEFORE adding this snapshot's own files
-                if self.partition_by:
-                    gone = {
-                        self._partition_of(f, self.partition_by)
-                        for f in removed
-                    }
-                    delta = [
-                        f
-                        for f in delta
-                        if self._partition_of(f, self.partition_by)
-                        not in gone
-                    ]
-                else:
-                    delta = []  # unpartitioned full overwrite
+                delta = self._kept(delta, self.partitions(removed))
                 seen = set(delta)
             for f in m["files"]:
                 if f not in parent_files and f not in seen:
@@ -687,24 +679,13 @@ class SnapshotTable:
         time travel to earlier snapshots still sees the rows until
         :meth:`expire_snapshots` reclaims them. Returns the new snapshot
         id, or None when nothing matched. ``[()]`` — the empty prefix —
-        drops every partition (a truncate).
+        drops every partition (a truncate), also of an unpartitioned table.
         """
-        if not self.partition_by:
-            raise ValueError("delete_partitions needs a partitioned table")
-        # prefix match: a tuple shorter than partition_by drops every
-        # sub-partition under it (a region drop on a (region, day) table)
-        drop = {tuple(str(x) for x in v) for v in values}
-        lens = {len(v) for v in drop}
         base = self.head()
         cur = self._files(base)
-        kept = [
-            f
-            for f in cur
-            if not any(
-                self._partition_of(f, self.partition_by)[:n] in drop
-                for n in lens
-            )
-        ]
+        # prefix match: a tuple shorter than partition_by drops every
+        # sub-partition under it (a region drop on a (region, day) table)
+        kept = self._kept(cur, self._prefixes(values))
         if len(kept) == len(cur):
             return None
         return self._commit(
@@ -727,48 +708,28 @@ class SnapshotTable:
         snapshot. Incremental appends (one file set per ingest) are what
         fragment partitions; at 10^12 rows an uncompacted month would pay
         a task per tiny file on every scan. The rewritten files keep the
-        table's sort order. Returns the new snapshot id, or None when
-        nothing needed compacting.
+        table's sort order. An unpartitioned table (the lineage and
+        metrics bookkeeping) is one partition, squashed whole: one append
+        per refresh is one more scan branch per read until it is.
+        Returns the new snapshot id, or None when nothing needed
+        compacting.
         """
         from collections import Counter
 
         base = self.head()
         cur = self._files(base)
-        if not self.partition_by:
-            # unpartitioned squash (lineage/metrics bookkeeping tables):
-            # one append per refresh leaves one file subtree per run, and
-            # the manifest-driven read unions one scan branch per subtree
-            # — O(#runs) plan growth unless periodically rewritten
-            if len(cur) < min_files:
-                return None
-            df = self._read_files(spark, cur)
-            n_rows = df.count()
-            n_out = max(1, -(-n_rows // target_rows_per_file))
-            _sub, new_files = self._write_files(df.repartition(n_out))
-            return self._commit(
-                new_files,
-                "compact",
-                {
-                    **(summary or {}),
-                    "rewritten_files": len(cur),
-                    "new_files": len(new_files),
-                },
-                expected_parent=base,
-            )
         counts = Counter(self._partition_of(f, self.partition_by) for f in cur)
         todo = {p for p, n in counts.items() if n >= min_files}
         if not todo:
             return None
-        victims = [
-            f for f in cur if self._partition_of(f, self.partition_by) in todo
-        ]
+        kept = self._kept(cur, todo)
+        victims = sorted(set(cur).difference(kept))
         df = self._read_files(spark, victims)
         n_rows = df.count()
         n_out = max(1, -(-n_rows // target_rows_per_file))
         _sub, new_files = self._write_files(
             df.repartition(n_out, *self.partition_by)
         )
-        kept = [f for f in cur if f not in set(victims)]
         return self._commit(
             kept + new_files,
             "compact",
@@ -815,13 +776,8 @@ class SnapshotTable:
         live = {f for m in keep for f in m["files"]}
         dead = {f for m in drop for f in m["files"]} - live
         # 1) earliest kept snapshot becomes the chain root
-        first_kept = dict(self._manifest(keep[0]["snapshot_id"]))
-        first_kept["parent"] = None
-        path = os.path.join(self.man_dir, f"snap-{first_kept['snapshot_id']}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(first_kept, f)
-        os.replace(tmp, path)
+        root = {**self._manifest(keep[0]["snapshot_id"]), "parent": None}
+        self._replace(f"snap-{root['snapshot_id']}.json", json.dumps(root))
         # 2) drop expired manifests (chain no longer references them)
         for m in drop:
             try:
@@ -841,7 +797,4 @@ class SnapshotTable:
     def rollback(self, snapshot_id: str) -> None:
         """Reset HEAD to an earlier snapshot (manifests are immutable)."""
         self._manifest(snapshot_id)  # existence check
-        tmp = os.path.join(self.man_dir, f"HEAD.tmp{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(snapshot_id)
-        os.replace(tmp, os.path.join(self.man_dir, "HEAD"))
+        self._replace("HEAD", snapshot_id)

@@ -34,6 +34,8 @@ import json
 import os
 import sys
 
+from pyspark.sql.types import IntegralType
+
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
@@ -84,8 +86,18 @@ def cmd_pack(args) -> None:
 
 def cmd_read(args) -> None:
     p = _pipeline(args)
+    key = args.key
+    # --key arrives as text: an integer-key tier takes it as an int, the
+    # type whose bucket the driver-side read can hash
+    if isinstance(p.tiers[args.tier].recorded_type(p.key), IntegralType):
+        try:
+            key = int(key)
+        except ValueError:
+            raise SystemExit(
+                f"--key {key!r}: the {args.tier} tier has integer keys"
+            )
     rows = (
-        p.point_read(args.key, args.tier, start=args.start, end=args.end)
+        p.point_read(key, args.tier, start=args.start, end=args.end)
         .limit(args.limit)
         .collect()
     )

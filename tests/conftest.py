@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="c3s_sm_spark_tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="c3s_sm_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -67,7 +67,7 @@ def test_partition_mismatch_rejected(tmp_path, spark):
         SnapshotTable(str(tmp_path / "t"), ["q"])
 
 
-def test_overwrite_replace_grain_and_values(spark, tmp_path):
+def _pq_table(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t"), ["p", "q"])
     t.append(
         spark.createDataFrame(
@@ -75,19 +75,74 @@ def test_overwrite_replace_grain_and_values(spark, tmp_path):
             "v int, p string, q string",
         )
     )
-    # grain 1: replacing partition p='a' supersedes BOTH (a,x) and (a,y)
-    # even though the new data only writes rows into (a,x)
+    return t
+
+
+def test_overwrite_replace_value_prefixes(spark, tmp_path):
+    t = _pq_table(spark, tmp_path)
+    # the one-column prefix ('a',) supersedes BOTH (a,x) and (a,y) even
+    # though the new data only writes rows into (a,x)
     t.overwrite_partitions(
         spark.createDataFrame([(10, "a", "x")], "v int, p string, q string"),
-        replace_grain=1,
+        replace_values=[("a",)],
     )
     assert {r["v"] for r in t.read(spark).collect()} == {10, 3}
+    # (a, x) lies under ('a',): one prefix replaced
+    assert t.snapshots()[-1]["summary"] == {"replaced_partitions": 1}
     # replace_values: declare (b,) replaced with zero rows -> dropped
     t.overwrite_partitions(
         spark.createDataFrame([], "v int, p string, q string"),
         replace_values=[("b",)],
     )
     assert {r["v"] for r in t.read(spark).collect()} == {10}
+
+
+def test_overwrite_empty_prefix_replaces_every_partition(spark, tmp_path):
+    t = _pq_table(spark, tmp_path)
+    t.overwrite_partitions(
+        spark.createDataFrame([(20, "c", "z")], "v int, p string, q string"),
+        {"op": "rebuild"},
+        replace_values=[()],
+    )
+    assert [(r["v"], r["p"], r["q"]) for r in t.read(spark).collect()] == [
+        (20, "c", "z")
+    ]
+    m = t.snapshots()[-1]
+    assert m["operation"] == "overwrite_partitions"
+    assert m["summary"] == {"op": "rebuild", "replaced_partitions": 1}
+    assert t.partitions() == {("c", "z")}
+
+
+def test_unpartitioned_overwrite_and_compact(spark, tmp_path):
+    """An unpartitioned table is the one partition ``()``: an overwrite
+    replaces all of it (``None`` empties it), compaction squashes it."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    for i in range(3):
+        t.append(spark.createDataFrame([(i,)], "x int"))
+    assert t.partitions() == {()}
+    s = t.overwrite_partitions(spark.createDataFrame([(7,), (8,)], "x int"))
+    assert sorted(r["x"] for r in t.read(spark).collect()) == [7, 8]
+    m = t._manifest(s)
+    assert m["operation"] == "overwrite" and m["summary"] == {}
+    # the earlier appends are superseded: an incremental read sees only
+    # the overwrite's rows
+    first = t.snapshots()[0]["snapshot_id"]
+    assert sorted(r["x"] for r in t.read_incremental(spark, first).collect()) == [
+        7, 8
+    ]
+    t.append(spark.createDataFrame([(9,)], "x int"))
+    n_files = len(t._files())
+    s = t.compact(spark, summary={"recorded": []})
+    m = t._manifest(s)
+    assert m["operation"] == "compact" and len(m["files"]) == 1
+    assert m["summary"] == {"recorded": [], "rewritten_files": n_files,
+                            "new_files": 1}
+    assert sorted(r["x"] for r in t.read(spark).collect()) == [7, 8, 9]
+    assert t.compact(spark) is None
+    s = t.overwrite_partitions(None, {"op": "clear"})
+    assert t._files() == [] and t._manifest(s)["operation"] == "overwrite"
+    t.rollback(t.snapshots()[-2]["snapshot_id"])
+    assert t.delete_partitions([()]) is not None and t._files() == []
 
 
 def test_delete_partitions_prefix_match(spark, tmp_path):
@@ -344,9 +399,7 @@ def test_retention_cascade_and_coverage_guard(spark, tmp_path, raw_points):
     p = TierPipeline(spark, str(tmp_path / "tp"))
     p.ingest(raw_points)  # 2019-10 .. 2019-12
     p.refresh()
-    months = lambda tbl: sorted(  # noqa: E731
-        {tbl._partition_of(f, ["pmonth"])[0] for f in tbl._files()}
-    )
+    months = lambda tbl: sorted(m for (m,) in tbl.partitions())  # noqa: E731
     assert months(p.raw) == ["2019-10", "2019-11", "2019-12"]
     rep = p.retention({"raw": 1, "daily": 2}, as_of="2019-12")
     # raw keeps only the newest month; daily keeps two
@@ -908,7 +961,6 @@ def test_pack_tier_masks_months_of_overwrite_dropped_keys(
     tier.overwrite_partitions(
         month_df.where(F.col("doc_id") == survivor),
         {"op": "manual-overwrite"},
-        replace_grain=1,
     )
     s = p.pack_tier("daily")
     man = p.packed["daily"]._manifest(s)["summary"]

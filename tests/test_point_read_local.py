@@ -4,7 +4,13 @@ job, and it returns what the Spark scan path returns."""
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import importlib.util
+import io
+import json
 import math
+import os
 import random
 import shutil
 import uuid
@@ -71,6 +77,19 @@ def bases(spark, raw_points, tmp_path_factory):
         "version", F.lit("v9")))
     p.refresh(["daily"])
     return out
+
+
+@pytest.fixture(scope="module")
+def long_base(spark, raw_points, tmp_path_factory):
+    """Base path of a pipeline whose key column is a bigint, daily
+    refreshed and never packed."""
+    base = str(tmp_path_factory.mktemp("long_key") / "tp")
+    p = TierPipeline(spark, base)
+    p.ingest(raw_points.withColumn(
+        "doc_id", F.substring("doc_id", 4, 10).cast("long")
+    ))
+    p.refresh(["daily"])
+    return base
 
 
 def _jobs_during(spark, fn):
@@ -201,8 +220,7 @@ def test_driver_key_bucket_equals_kb(spark, tmp_path, monkeypatch, kind):
     assert [k for _, k in got] == values
 
 
-def test_mismatched_key_type_takes_spark_path(spark, bases, raw_points,
-                                              tmp_path):
+def test_mismatched_key_type_takes_spark_path(spark, bases, long_base):
     """A key whose Python type does not match the stored key type has no
     driver-side bucket; the read takes the Spark path and returns what
     ``local_decode=False`` returns."""
@@ -216,12 +234,7 @@ def test_mismatched_key_type_takes_spark_path(spark, bases, raw_points,
     assert _series(got) == _series(
         p.point_read(4, "daily", local_decode=False).collect()
     )
-    raw_long = raw_points.withColumn(
-        "doc_id", F.substring("doc_id", 4, 10).cast("long")
-    )
-    p = TierPipeline(spark, str(tmp_path / "tp"))
-    p.ingest(raw_long)
-    p.refresh(["daily"])
+    p = TierPipeline(spark, long_base)
     got, jobs = _jobs_during(spark, lambda: p.point_read("5", "daily").collect())
     assert jobs and len(got) > 0
     assert _series(got) == _series(
@@ -238,3 +251,33 @@ def test_over_cap_read_degrades_to_spark(spark, bases, monkeypatch):
         spark, lambda: _series(p.point_read(KEY, "daily", *RANGE).collect())
     )
     assert jobs and got == exp and len(exp) > 0
+
+
+def test_cli_read_takes_integer_key_on_driver_path(spark, long_base):
+    """``rollup_job read --key 5`` on a bigint-key tier reads the key as
+    an int: the same rows as ``point_read(5)``, and no Spark job. A key
+    that is not an integer is a usage error."""
+    spec = importlib.util.spec_from_file_location(
+        "rollup_job",
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs",
+                     "rollup_job.py"),
+    )
+    rollup_job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(rollup_job)
+    args = argparse.Namespace(base=long_base, master=None, cmd="read",
+                              key="5", tier="daily", limit=10_000,
+                              start=None, end=None)
+    buf = io.StringIO()
+    with pytest.MonkeyPatch.context() as mp, contextlib.redirect_stdout(buf):
+        # the test session, not a getOrCreate that resets its confs
+        mp.setattr(rollup_job, "get_spark", lambda **kw: spark)
+        _, jobs = _jobs_during(spark, lambda: rollup_job.cmd_read(args))
+        with pytest.raises(SystemExit, match="integer keys"):
+            rollup_job.cmd_read(argparse.Namespace(**{**vars(args), "key": "d5"}))
+    assert jobs == []
+    exp = [
+        {k: str(v) for k, v in r.asDict().items()}
+        for r in TierPipeline(spark, long_base).point_read(5, "daily").collect()
+    ]
+    assert [json.loads(ln) for ln in buf.getvalue().splitlines()] == exp
+    assert len(exp) > 0

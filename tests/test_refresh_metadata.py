@@ -248,3 +248,136 @@ def test_status_hwm_is_the_refresh_hwm(spark, tmp_path, raw_points, refreshed):
             os.path.getsize(os.path.join(tbl.root, f)) for f in files
         )
     assert st["tiers"]["dekadal"]["hwm_snapshot"] != p.tiers["daily"].head()
+
+
+# ------------------------------------------------------ crash injection
+
+#: where a commit is cut: after its data write (before ``_commit``),
+#: after its manifest write (before the HEAD swap), after the HEAD swap
+CRASH_POINTS = ("data", "manifest", "head")
+#: keys whose series the converged state compares (the first three get
+#: a December delta)
+CRASH_KEYS = ("doc0000000003", "doc0000000004", "doc0000000005",
+              "doc0000000011")
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _arm_crash(mp, root: str, point: str) -> list:
+    """Make the next commit of the table at ``root`` raise once at
+    ``point``; returns the list the firing is recorded in."""
+    fired: list = []
+    commit, replace = SnapshotTable._commit, SnapshotTable._replace
+
+    def armed(tbl, at):
+        if point == at and tbl.root == root and not fired:
+            fired.append(at)
+            raise _Crash(f"injected crash: {at}")
+
+    def crashing_commit(tbl, *a, **kw):
+        armed(tbl, "data")
+        sid = commit(tbl, *a, **kw)
+        armed(tbl, "head")
+        return sid
+
+    def crashing_replace(tbl, name, text):
+        if name == "HEAD":
+            armed(tbl, "manifest")
+        replace(tbl, name, text)
+
+    mp.setattr(SnapshotTable, "_commit", crashing_commit)
+    mp.setattr(SnapshotTable, "_replace", crashing_replace)
+    return fired
+
+
+def _state(p: TierPipeline) -> dict:
+    """Everything a re-run must reproduce exactly: tier, packed and tail
+    rows, point reads (packed plus tail, or the tier) of sampled keys,
+    and the run-independent lineage columns. Read on the driver with
+    pyarrow; ``repr`` keeps floats exact and NaN comparable."""
+    import pyarrow.parquet as pq
+
+    def rows(tbl, columns=None):
+        return sorted(
+            repr(r)
+            for f in tbl._files()
+            for r in pq.read_table(os.path.join(tbl.root, f), columns=columns)
+            .to_pylist()
+        )
+
+    return {
+        "tiers": {t: rows(tbl) for t, tbl in p.tiers.items()},
+        "packed": rows(p.packed["daily"]),
+        "tail": rows(p.tails["daily"]),
+        "reads": {k: repr(p.point_read(k, "daily").collect()) for k in CRASH_KEYS},
+        "lineage": rows(p.lineage, ["tier", "n_months", "n_rows", "status", "note"]),
+    }
+
+
+@pytest.fixture(scope="module")
+def crash_chain(spark, raw_points, refreshed, tmp_path_factory):
+    """Crash-free stages, each a base path: ``ingested`` (refreshed,
+    fully packed, a December delta ingested), ``refreshed`` (+ refresh),
+    ``tail_packed`` (+ incremental pack), ``folded`` (+ fold); and
+    ``states``, each stage's :func:`_state` once computed."""
+    root = tmp_path_factory.mktemp("crash_chain")
+    p = _copy(spark, refreshed, root / "ingested")
+    p.pack_tier("daily")
+    p.ingest(
+        raw_points.where(
+            F.col("doc_id").isin(*CRASH_KEYS[:3]) & (F.col("ts") >= "2019-12-01")
+        )
+        .withColumn("v", F.col("v") * 0.5 + 0.125)
+        .withColumn("version", F.lit("v9"))
+    )
+    stages = {"ingested": p.base}
+    for name, step in (
+        ("refreshed", lambda p: p.refresh()),
+        ("tail_packed", lambda p: p.pack_tier("daily")),
+        ("folded", lambda p: p.pack_tier("daily", fold=True)),
+    ):
+        p = _copy(spark, p.base, root / name)
+        step(p)
+        stages[name] = p.base
+    return {**stages, "states": {}}
+
+
+# (commit cut, the table committing, start stage, the job, its result)
+CRASH_COMMITS = {
+    "refresh-daily": ("daily", "ingested", lambda p: p.refresh(), "refreshed"),
+    "pack-tail": ("daily_tail", "refreshed", lambda p: p.pack_tier("daily"),
+                  "tail_packed"),
+    "pack-packed": ("daily_packed", "refreshed",
+                    lambda p: p.pack_tier("daily"), "tail_packed"),
+    "fold-truncate": ("daily_tail", "tail_packed",
+                      lambda p: p.pack_tier("daily", fold=True), "folded"),
+}
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+@pytest.mark.parametrize("commit", list(CRASH_COMMITS))
+def test_crash_at_commit_step_converges_on_rerun(
+    spark, tmp_path, crash_chain, commit, point
+):
+    """A job cut at any step of one commit, re-run in a fresh pipeline,
+    leaves the tables of the run that never crashed."""
+    table, start, job, result = CRASH_COMMITS[commit]
+    p = _copy(spark, crash_chain[start], tmp_path / "tp")
+    tbl = SnapshotTable(os.path.join(p.base, table))
+    head = tbl.head()
+    with pytest.MonkeyPatch.context() as mp:
+        fired = _arm_crash(mp, tbl.root, point)
+        with pytest.raises(_Crash):
+            job(p)
+    assert fired == [point]
+    assert (tbl.head() != head) == (point == "head")
+    manifests = [f for f in os.listdir(tbl.man_dir) if f.startswith("snap-")]
+    assert len(manifests) == len(tbl.snapshots()) + (point == "manifest")
+    p = TierPipeline(spark, p.base)  # a fresh process
+    job(p)
+    states = crash_chain["states"]
+    if result not in states:
+        states[result] = _state(TierPipeline(spark, crash_chain[result]))
+    assert _state(p) == states[result]
